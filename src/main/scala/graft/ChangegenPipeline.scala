@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{SequentialIds, SnapshotDiff, WayOps}
+import graft.operators.{SequentialIds, SnapshotDiff, TagOps, WayOps}
 import graft.osm.OsmChangeXml
 import graft.spatial.DWithinJoin
 
@@ -40,18 +42,42 @@ object ChangegenPipeline {
 
   /** Every intermediate the pipeline writes or counts — returned so the
     * registered `cg_pipeline_counts` query oracle-checks the SAME
-    * dataflow the main() serializes (not a re-derivation). */
+    * dataflow the main() serializes (not a re-derivation).
+    *
+    * `summary` holds [[run]]'s summary values: counts known once the
+    * frames are built, or counts the write observes (so read
+    * [[summaryLine]] only after writing). [[release]] unpersists the
+    * `cached` frames the write needed. */
   final case class Frames(
       nodes: DataFrame, splitWays: DataFrame, junctionAt: DataFrame,
       modified: DataFrame, deleteSet: DataFrame,
       nodeXml: DataFrame, wayXml: DataFrame, relXml: DataFrame,
       modifyXml: DataFrame, deleteXml: DataFrame,
       polyNodes: DataFrame, polyWays: DataFrame, polyRelations: DataFrame,
-      pointNodes: DataFrame, selfJunctions: DataFrame)
+      pointNodes: DataFrame, selfJunctions: DataFrame)(
+      summary: Seq[(String, () => Long)], cached: Seq[DataFrame]) {
+    def summaryLine: String = summary.map { case (k, n) => s"$k=${n()}" }.mkString(" ")
+    def release(): Unit = cached.foreach(_.unpersist())
+  }
+
+  /** `df` observed: the first job that runs it also counts its rows.
+    * The reader waits for that job, so observe only frames the write
+    * executes. Adaptive execution drops a subtree it found empty at
+    * run time (and with it the unmatched side of a join whose other
+    * side was empty); the observation then completes with no row,
+    * read as 0. */
+  private def counted(df: DataFrame): (DataFrame, () => Long) = {
+    val o = Observation()
+    (df.observe(o, count(lit(1)).as("n")), () => {
+      val r = Await.result(o.future, 10.minutes)
+      if (r.length == 0) 0L else r.getLong(0)
+    })
+  }
 
   /** Table discovery by name suffix — the reference's `_get_db_tables`
     * (`table_name LIKE '%suffix'`, __main__.py:55-68), used for BOTH
-    * deletion tables (`--deletion-suffix`) and new-feature tables
+    * deletion tables (`--deletion-suffix`; each contributes `<delete>`
+    * entries via its `osm_id` column) and new-feature tables
     * (`--suffix`, __main__.py:73-83 — the reference's default way of
     * naming its inputs). In database mode (`dir` is a `jdbc:` URL)
     * the discovery runs against the connection's table metadata
@@ -87,12 +113,6 @@ object ChangegenPipeline {
         .map(_.getAbsolutePath).sorted
     }
 
-  /** Deletion-table discovery (kept as the deletion-specific name the
-    * deletion path and its specs use): discovered tables contribute
-    * `<delete>` entries via their `osm_id` column. */
-  def discoverDeletionTables(dir: String, suffix: String): Seq[String] =
-    discoverTables(dir, suffix)
-
   /** Read a feature table RAW (all columns, geometry undecoded):
     * jdbc mode via the partition-ranged PostGIS reader, directory
     * mode straight from parquet (`name` may be a discovered absolute
@@ -103,6 +123,26 @@ object ChangegenPipeline {
         decodeGeom = false, hstoreCols = Nil)
     else if (name.endsWith(".parquet")) spark.read.parquet(name)
     else spark.read.parquet(s"$dir/$name.parquet")
+
+  /** A feature table's tags (reference _generate_tags_from_feature,
+    * generator.py:169-205): every column except `excluded` and the
+    * hstore column itself, merged with the hstore map — columns win
+    * on key conflicts. */
+  private def tableTags(df: DataFrame, excluded: Set[String], hstoreCol: Option[String]): Column = {
+    val skip = excluded ++ hstoreCol.map(_.toLowerCase)
+    val colTags = TagOps.tagsFromColumns(df, df.columns.map(_.toLowerCase).filterNot(skip.contains).toSeq.sorted)
+    hstoreCol.map(h => TagOps.mergeTags(colTags, TagOps.hstoreToMap(col(h)))).getOrElse(colTags)
+  }
+
+  /** Per-layer CRS (reference generator.py:69-78 builds its transformer
+    * from the layer's declared EPSG): reprojects decoded `x`/`y`
+    * vertices to WGS84 lon/lat. 4326 input leaves the plan unchanged;
+    * reprojection is a pure function, so equal vertices stay equal. */
+  private def toWgs84(df: DataFrame, srcEpsg: Int): DataFrame =
+    if (srcEpsg == 4326) df
+    else df.withColumn("_ll", graft.spatial.Geo.reproject(col("x"), col("y"), srcEpsg))
+      .withColumn("x", col("_ll.lon")).withColumn("y", col("_ll.lat"))
+      .drop("_ll")
 
   /** Geometry class of one WKB/hex-EWKB value: 1 = point, 2 = line,
     * 3 = polygon (MULTI* fold onto their base type; ISO Z/M offsets
@@ -149,6 +189,29 @@ object ChangegenPipeline {
     try run(args, spark) finally spark.stop()
   }
 
+  /** `--debug` per-stage progress lines (reference __main__.py:72 —
+    * its --debug flips the logger to DEBUG and the stages narrate).
+    * The message is by-name, so disabled runs pay nothing. */
+  private def dbg(enabled: Boolean, msg: => String): Unit =
+    if (enabled) println(s"[changegen:debug] $msg")
+
+  /** Lazy id-zone overflow guard: sequential ids assigned from
+    * `offset` must stay within `window` ids (ascending, or descending
+    * when `neg`) before they collide with the next zone. Checked per
+    * ROW as the ids flow — the round-18 eager `count()` guards each
+    * cost one extra driver job + a serialization barrier per build
+    * (cg_pipeline_counts regressed 3.6 → 4.8 s on them) — and still
+    * loud: index i ≥ window−1 ⟺ count ≥ window, exactly the old
+    * `require(count < window)`, failing the job before any XML or
+    * count leaves the overflowing frame. */
+  private def zoneGuard(id: Column, offset: Long, window: Long, neg: Boolean, what: String): Column = {
+    val bad = if (neg) id <= lit(offset - (window - 1)) else id >= lit(offset + (window - 1))
+    when(bad, raise_error(concat(
+      lit(s"$what: assigned node id "), id.cast("string"),
+      lit(s" overflows the fixed id zone ($window ids from $offset) — ids would collide with the next zone"))))
+      .otherwise(id)
+  }
+
   /** The full CLI dataflow on a caller-owned session — main() wraps
     * this with session lifecycle; the e2e spec drives it directly so
     * the database mode is proven through the exact argv path users
@@ -165,31 +228,18 @@ object ChangegenPipeline {
     * `--line-table` name a table (jdbc mode) or a parquet file
     * (directory mode) of (id, wkb_geometry) rows feeding the
     * `polyWkb` / `lineWkb` seams — MULTI* parts included — and
-    * `--poly-epsg` sets the polygon layer's source CRS. */
-  /** `--debug` per-stage progress lines (reference __main__.py:72 —
-    * its --debug flips the logger to DEBUG and the stages narrate).
-    * The message is by-name, so disabled runs pay nothing. */
-  private def dbg(enabled: Boolean, msg: => String): Unit =
-    if (enabled) println(s"[changegen:debug] $msg")
-
-  /** Lazy id-zone overflow guard: sequential ids assigned from
-    * `offset` must stay within `window` ids (ascending, or descending
-    * when `neg`) before they collide with the next zone. Checked per
-    * ROW as the ids flow — the round-18 eager `count()` guards each
-    * cost one extra driver job + a serialization barrier per build
-    * (cg_pipeline_counts regressed 3.6 → 4.8 s on them) — and still
-    * loud: index i ≥ window−1 ⟺ count ≥ window, exactly the old
-    * `require(count < window)`, failing the job before any XML or
-    * count leaves the overflowing frame. */
-  private def zoneGuard(id: org.apache.spark.sql.Column, offset: Long, window: Long,
-                        neg: Boolean, what: String): org.apache.spark.sql.Column = {
-    val bad = if (neg) id <= lit(offset - (window - 1)) else id >= lit(offset + (window - 1))
-    when(bad, raise_error(concat(
-      lit(s"$what: assigned node id "), id.cast("string"),
-      lit(s" overflows the fixed id zone ($window ids from $offset) — ids would collide with the next zone"))))
-      .otherwise(id)
-  }
-
+    * `--poly-epsg` sets the polygon layer's source CRS. Once any
+    * feature input is given (`--suffix`, `--line-table`,
+    * `--poly-table`), a geometry class it does not supply stays empty:
+    * the synthetic demo features and tables are read only by runs
+    * without feature inputs.
+    *
+    * Jobs: building the frames runs Spark jobs — ids materialize
+    * eagerly through `localCheckpoint` plus a partition-count
+    * `collect` (see [[build]]), and local-checkpoint blocks do not
+    * survive the loss of an executor. The summary line reads counts
+    * the write observed, so no job runs after the write; the build's
+    * caches are released once it ends, failed or not. */
   def run(args: Array[String], spark: SparkSession): Unit = {
     val (flagArgs, pos) = args.partition(_.startsWith("--"))
     val parsedFlags = flagArgs.map { f =>
@@ -238,18 +288,6 @@ object ChangegenPipeline {
     val osmSrc = arg(6, "osmsrc")
     val deletionSuffix = arg(7, "deletion-suffix")
     val noCollisions = arg(8, "no-collisions").exists(_.toBoolean)
-    // real-geometry feature tables (reference db.py:28-101 reads
-    // wkb_geometry through OGR): first column = feature id, a
-    // wkb_geometry column = the WKB/hex payload
-    def geomFrame(name: String, groupCol: String): DataFrame = {
-      val raw =
-        if (sfDir.startsWith("jdbc:"))
-          graft.sources.Snapshots.postgisTable(spark, sfDir, name,
-            decodeGeom = false, hstoreCols = Nil)
-        else spark.read.parquet(s"$sfDir/$name.parquet")
-      raw.select(col(raw.columns.head).cast("long").as(groupCol),
-        col("wkb_geometry").as("wkb"))
-    }
     val polyEpsg = flags.get("poly-epsg").map(_.toInt).getOrElse(4326)
     // reference __main__.py:104-117,152-163: --modify-meta turns the
     // suffix tables into <modify> elements (metadata only, geometry
@@ -315,7 +353,7 @@ object ChangegenPipeline {
     // silently collapse every such feature into one way (imposm
     // column order over JDBC/parquet is not user-visible, so "first
     // column" alone is not a safe id heuristic).
-    def featId(df: DataFrame, name: String): org.apache.spark.sql.Column = {
+    def featId(df: DataFrame, name: String): Column = {
       val idc = df.columns.find(_.equalsIgnoreCase("osm_id")).getOrElse(df.columns.head)
       val c = col(idc)
       when(c.isNull || c.cast("long").isNull,
@@ -323,19 +361,9 @@ object ChangegenPipeline {
           coalesce(c.cast("string"), lit("NULL")))))
         .otherwise(c.cast("long"))
     }
-    // create-mode tags (reference _generate_tags_from_feature,
-    // generator.py:169-205): every table column EXCEPT the geometry
-    // and the hstore column itself — osm_id INCLUDED (only the modify
-    // branch filters it out) — merged with the hstore map, columns
-    // winning on key conflicts
-    def featureTags(df: DataFrame): org.apache.spark.sql.Column = {
-      val excluded = Set("wkb_geometry") ++ hstoreCol.map(_.toLowerCase)
-      val tagCols = df.columns.map(_.toLowerCase).filterNot(excluded.contains).toSeq.sorted
-      val colTags = graft.operators.TagOps.tagsFromColumns(df, tagCols)
-      hstoreCol
-        .map(h => graft.operators.TagOps.mergeTags(colTags, graft.operators.TagOps.hstoreToMap(col(h))))
-        .getOrElse(colTags)
-    }
+    // a run given feature inputs emits only those: no demo features
+    // fill the geometry classes it leaves out
+    val featureInput = suffixes.nonEmpty || flags.contains("poly-table") || flags.contains("line-table")
     val f =
       if (modifyMeta) buildModifyOnly(spark, sfDir, osmSrc, discoveredFrames, hstoreCol)
       else {
@@ -343,15 +371,22 @@ object ChangegenPipeline {
         // sampled geometry class; the table ordinal moves into the
         // group id's high bits so per-table feature ids stay
         // injective after the union (explicit --poly-table /
-        // --line-table inputs keep their raw ids, ordinal 0)
+        // --line-table inputs keep their raw ids, ordinal 0, from the
+        // first column — reference db.py:28-101 reads wkb_geometry
+        // through OGR)
         def seamUnion(cls: Int, explicitTbl: Option[String], groupCol: String): Option[DataFrame] = {
           val fromSuffix = discoveredFrames.filter(_._3 == cls)
-          val all = explicitTbl.map(geomFrame(_, groupCol)).toSeq ++
+          val all = explicitTbl.map { n =>
+              val raw = featureTable(spark, sfDir, n)
+              raw.select(col(raw.columns.head).cast("long").as(groupCol), col("wkb_geometry").as("wkb"))
+            }.toSeq ++
             fromSuffix.zipWithIndex.map { case ((name, df, _), i) =>
               df.select((lit((i + 1).toLong << 40) + featId(df, name)).as(groupCol),
                 col("wkb_geometry").as("wkb"))
             }
-          all.reduceOption(_ unionByName _)
+          all.reduceOption(_ unionByName _).orElse(
+            if (featureInput) Some(spark.range(0).select(col("id").as(groupCol), lit(null).cast("binary").as("wkb")))
+            else None)
         }
         // point-class tables: v1 <create> nodes (reference
         // generator.py:622-631) — reprojected coords + full
@@ -361,7 +396,8 @@ object ChangegenPipeline {
           if (pointFrames.isEmpty) None
           else Some(pointFrames.zipWithIndex.map { case ((name, df, _), i) =>
             df.select((lit((i + 1).toLong << 40) + featId(df, name)).as("pgrp"),
-              featureTags(df).as("ptags"),
+              // create mode keeps osm_id as a tag (only modify drops it)
+              tableTags(df, Set("wkb_geometry"), hstoreCol).as("ptags"),
               col("wkb_geometry").as("wkb"))
           }.reduce(_ unionByName _))
         val existingWkb =
@@ -388,21 +424,21 @@ object ChangegenPipeline {
     dbg(debug, s"stage 5 (write): assembling OsmChange document -> $out" +
       s" (shards=$shards gzip=${forceGzip || out.endsWith(".gz")})")
     val tWrite0 = System.nanoTime()
-    if (shards > 0) {
-      def sec(df: DataFrame, s: String) = df.select(
-        pmod(xxhash64(col("xml")), lit(shards)).cast("int").as("shard"), lit(s).as("section"), col("xml"))
-      OsmChangeXml.writeSharded(out,
-        sec(f.nodeXml, "create").unionByName(sec(f.wayXml, "create"))
-          .unionByName(sec(f.relXml, "create"))
-          .unionByName(sec(f.modifyXml, "modify")).unionByName(sec(f.deleteXml, "delete")),
-        shards, gzip = forceGzip)
-    } else
-      OsmChangeXml.write(out, f.nodeXml.unionByName(f.wayXml).unionByName(f.relXml),
-        Some(f.modifyXml), Some(f.deleteXml), gzip = forceGzip || out.endsWith(".gz"))
+    try {
+      if (shards > 0) {
+        def sec(df: DataFrame, s: String) = df.select(
+          pmod(xxhash64(col("xml")), lit(shards)).cast("int").as("shard"), lit(s).as("section"), col("xml"))
+        OsmChangeXml.writeSharded(out,
+          sec(f.nodeXml, "create").unionByName(sec(f.wayXml, "create"))
+            .unionByName(sec(f.relXml, "create"))
+            .unionByName(sec(f.modifyXml, "modify")).unionByName(sec(f.deleteXml, "delete")),
+          shards, gzip = forceGzip)
+      } else
+        OsmChangeXml.write(out, f.nodeXml.unionByName(f.wayXml).unionByName(f.relXml),
+          Some(f.modifyXml), Some(f.deleteXml), gzip = forceGzip || out.endsWith(".gz"))
+    } finally f.release()
     dbg(debug, f"stage 5 (write): done in ${(System.nanoTime() - tWrite0) / 1e9}%.2f s")
-    println(s"[changegen] wrote $out: nodes=${f.nodes.count()} ways=${f.splitWays.count()} " +
-      s"points=${f.pointNodes.count()} self_junctions=${f.selfJunctions.count()} " +
-      s"junctions=${f.junctionAt.count()} modified=${f.modified.count()} deletes=${f.deleteSet.count()}")
+    println(s"[changegen] wrote $out: ${f.summaryLine}")
   }
 
   /** modify_only (reference generator.py:573,608,634-668): features
@@ -421,7 +457,12 @@ object ChangegenPipeline {
     * Line/polygon rows become way modifies (node lists joined from
     * the extract by `osm_id`); point rows become v2 nodes at their
     * own coordinates (generator.py:610-625). Without `features` the
-    * synthetic demo derivation is unchanged. */
+    * synthetic demo derivation is unchanged, read from `lineitem`
+    * only when no `osmSrc` extract is given.
+    *
+    * Jobs: each line/polygon feature table runs one `collect` at build
+    * time (the missing-`osm_id` check). Nothing is cached; the
+    * modified-way count of the summary line is observed by the write. */
   def buildModifyOnly(spark: SparkSession, sfDir: String,
                       osmSrc: Option[String] = None,
                       features: Seq[(String, DataFrame, Int)] = Nil,
@@ -430,30 +471,25 @@ object ChangegenPipeline {
       .filter(lit(false)).select("xml")
     // "osm_id" analog: the feature's vertex key maps onto existing node
     // ids; features themselves map onto existing ways (feat → way id)
-    val lineitem = Tables.load(spark, sfDir, "lineitem")
     val existingEdges = osmSrc match {
       case Some(p) => graft.osm.OsmPbf.ways(spark, p).toDF()
         .select(col("id").as("eway"), posexplode(col("nds")).as(Seq("seq", "enode")))
-      case None => lineitem.select(
+      case None => Tables.load(spark, sfDir, "lineitem").select(
         col("l_orderkey").as("eway"), col("l_linenumber").as("seq"), col("l_partkey").as("enode"))
     }
     val existingWays = WayOps.wayNodeMap(existingEdges, "eway", "seq", "enode")
-    val (modified, modifyXml) =
+    val (modified, modifyXml, nModified) =
       if (features.isEmpty) {
         // synthetic demo derivation: every existing way refreshed
-        val m = existingWays.withColumn("new_nds", col("nds")).persist()
-        (m, m.select(
+        val m = existingWays.withColumn("new_nds", col("nds"))
+        val (written, n) = counted(m)
+        (m, written.select(
           OsmChangeXml.wayXml(col("eway"), lit(2), col("new_nds"),
             map(lit("surface"), lit("asphalt"),
-              lit("ref"), concat(lit("W"), col("eway").cast("string")))).as("xml")))
+              lit("ref"), concat(lit("W"), col("eway").cast("string")))).as("xml")), n)
       } else {
         val perTable = features.map { case (name, df, cls) =>
-          val excluded = Set("osm_id", "wkb_geometry") ++ hstoreCol.map(_.toLowerCase)
-          val tagCols = df.columns.map(_.toLowerCase).filterNot(excluded.contains).toSeq.sorted
-          val colTags = graft.operators.TagOps.tagsFromColumns(df, tagCols)
-          val tags = hstoreCol
-            .map(h => graft.operators.TagOps.mergeTags(colTags, graft.operators.TagOps.hstoreToMap(col(h))))
-            .getOrElse(colTags)
+          val tags = tableTags(df, Set("osm_id", "wkb_geometry"), hstoreCol)
           if (cls == 1) {
             // point feature: v2 node at the feature's own coordinates
             val xml = df
@@ -478,19 +514,22 @@ object ChangegenPipeline {
                 s"${missing.mkString(", ")} (reference fails with KeyError on a " +
                 "feature whose osm_id is missing from osmsrc)")
             val ways = feats.join(existingWays, "eway")
-            (ways.select(OsmChangeXml.wayXml(col("eway"), lit(2), col("nds"), col("_tags")).as("xml")),
-              Some(ways.select(col("eway"), col("nds").as("new_nds"))))
+            val (written, n) = counted(ways)
+            (written.select(OsmChangeXml.wayXml(col("eway"), lit(2), col("nds"), col("_tags")).as("xml")),
+              Some((ways.select(col("eway"), col("nds").as("new_nds")), n)))
           }
         }
-        val m = perTable.flatMap(_._2)
-          .reduceOption(_ unionByName _)
+        val wayTables = perTable.flatMap(_._2)
+        val m = wayTables.map(_._1).reduceOption(_ unionByName _)
           .getOrElse(existingWays.select(col("eway"), col("nds").as("new_nds")).filter(lit(false)))
-          .persist()
-        (m, perTable.map(_._1).reduce(_ unionByName _))
+        (m, perTable.map(_._1).reduce(_ unionByName _), () => wayTables.map(_._2()).sum)
       }
     val none = modified.filter(lit(false))
+    val zero = () => 0L
     Frames(none, none, none, modified, none.select(lit("way").as("elem_type"), col("eway").as("elem_id")),
-      empty, empty, empty, modifyXml, empty, none, none, none, none, none)
+      empty, empty, empty, modifyXml, empty, none, none, none, none, none)(
+      Seq("nodes" -> zero, "ways" -> zero, "points" -> zero, "self_junctions" -> zero,
+        "junctions" -> zero, "modified" -> nModified, "deletes" -> zero), Nil)
   }
 
   /** Build the full dataflow. `idOffset = None` reproduces the CLI
@@ -499,8 +538,11 @@ object ChangegenPipeline {
     * extract (the reference CLI's `osmsrc` argument: way node lists
     * and max-id collision checks come from the extract,
     * generator.py:35-53 / __main__.py:26-53); without it, existing
-    * ways derive synthetically from lineitem. */
-  /** `polyWkb`: optional REAL-geometry polygon source — a DataFrame
+    * ways derive synthetically from lineitem, and a snapshot diff on
+    * orders adds demo deletions. Each demo table (supplier, lineitem,
+    * orders, part) is read only by the branch that derives from it.
+    *
+    * `polyWkb`: optional REAL-geometry polygon source — a DataFrame
     * with columns `(pgroup: long, wkb: binary | hex string)`, the
     * shape a partitioned JDBC read of a PostGIS snapshot delivers
     * (db.py:28-101 reads `wkb_geometry` columns; over JDBC they
@@ -510,15 +552,17 @@ object ChangegenPipeline {
     * inner-role member in the feature's multipolygon relation
     * (reference generator.py:683,719-753) — instead of synthesizing
     * rings from the part table. When absent, the synthetic
-    * part-table derivation is unchanged. */
-  /** `lineWkb`: optional REAL-geometry linear source — `(lgroup:
+    * part-table derivation is unchanged.
+    *
+    * `lineWkb`: optional REAL-geometry linear source — `(lgroup:
     * long, wkb: binary | hex string)` rows, LineString OR
     * MultiLineString (the reference crashes on the latter,
     * generator.py:603-606). Each MULTI* part becomes its own feature
     * and flows through the same node-assignment / way-split /
     * junction dataflow as the synthetic derivation (WGS84 input —
-    * reproject upstream via [[graft.spatial.Geo]] for other CRS). */
-  /** `existingWkb`: optional `(eway: long, wkb: binary | hex string)`
+    * reproject upstream via [[graft.spatial.Geo]] for other CRS).
+    *
+    * `existingWkb`: optional `(eway: long, wkb: binary | hex string)`
     * rows naming the EXISTING geometries eligible for junction
     * modification — the reference's `--existing` tables
     * (__main__.py:95-103: "Table of geometries to use when
@@ -528,8 +572,9 @@ object ChangegenPipeline {
     * node ids resolved positionally against the extract's way node
     * lists — so `osmSrc` is required), and only these ways are
     * spliced. Deletions still expand against the FULL extract: the
-    * reference's deletion pass is independent of `--existing`. */
-  /** `pointWkb`: optional POINT feature source — `(pgrp: long
+    * reference's deletion pass is independent of `--existing`.
+    *
+    * `pointWkb`: optional POINT feature source — `(pgrp: long
     * injective feature key, ptags: map<string,string>, wkb)` rows.
     * Each feature becomes ONE v1 `<create>` node at its (reprojected)
     * coordinates carrying its table-derived tags — the reference's
@@ -538,8 +583,9 @@ object ChangegenPipeline {
     * junction pass, no relations — exactly the reference's seam.
     * MULTIPOINT rows contribute their FIRST point (the reference's
     * isinstance ladder silently drops MultiPoint features entirely —
-    * handled here as one-node-per-feature instead of silent loss). */
-  /** `selfIntersect`: the reference's `--self` / `-si` flag
+    * handled here as one-node-per-feature instead of silent loss).
+    *
+    * `selfIntersect`: the reference's `--self` / `-si` flag
     * (__main__.py:131-140): junctions AMONG the new features
     * themselves. Closest points of feature pairs within `selfRadius`
     * (`db.intersections(table, table)`, `not st_equals` excluded)
@@ -549,7 +595,18 @@ object ChangegenPipeline {
     * junction id for a 6dp-coincident vertex (generator.py:429-448)
     * and INSERTS the remaining junctions at their projection index
     * (generator.py:449-476) — so two crossing new features share one
-    * node id in the changefile. */
+    * node id in the changefile.
+    *
+    * Jobs: building the frames is not lazy. One aggregate job reads
+    * the max existing ids, and every sequential id assignment (line
+    * vertices, line features of `lineWkb`, `--self` junctions, polygon
+    * nodes and ways, points) materializes eagerly through
+    * `localCheckpoint` plus a partition-count `collect` (see
+    * [[graft.operators.SequentialIds.assign]]). The returned frames
+    * read those checkpoints, whose blocks live on the executors and do
+    * not survive the loss of one. The `--self` and synthetic-polygon
+    * frames that several outputs read stay cached until
+    * [[Frames.release]]. */
   def build(spark: SparkSession, sfDir: String, maxNodes: Int = 500,
             idOffset: Option[Long] = None, negIds: Boolean = false,
             osmSrc: Option[String] = None,
@@ -566,8 +623,26 @@ object ChangegenPipeline {
             debug: Boolean = false): Frames = {
     require(existingWkb.isEmpty || osmSrc.isDefined,
       "existingWkb needs osmSrc: vertex node ids resolve positionally against the extract")
-    val supplier = Tables.load(spark, sfDir, "supplier")
-    val lineitem = Tables.load(spark, sfDir, "lineitem")
+
+    // the existing side: way→node edge rows and node coordinates. With
+    // osmSrc, both come from the .pbf extract (lon→x, lat→y planar
+    // convention); synthetically, from the lineitem edge table.
+    val (existingEdges0, existingNodes0) = osmSrc match {
+      case Some(p) =>
+        val e = graft.osm.OsmPbf.ways(spark, p).toDF()
+          .select(col("id").as("eway"), posexplode(col("nds")).as(Seq("seq", "enode")))
+        val n = graft.osm.OsmPbf.nodes(spark, p).toDF()
+          .select(col("id").as("enode"), col("lon").as("ex"), col("lat").as("ey"))
+        (e, n)
+      case None =>
+        val e = Tables.load(spark, sfDir, "lineitem").select(
+          col("l_orderkey").as("eway"), col("l_linenumber").as("seq"), col("l_partkey").as("enode"))
+        val n = e.select(
+          col("enode"),
+          ((col("enode") * 13 % 1000) / 10.0).as("ex"),
+          ((col("enode") * 29 % 1000) / 10.0).as("ey")).distinct()
+        (e, n)
+    }
 
     // collision safety (reference __main__.py:26-53): never hand out an
     // id already present in the "existing" data — derive the node-id
@@ -577,7 +652,7 @@ object ChangegenPipeline {
       case Some(p) =>
         graft.osm.OsmPbf.nodes(spark, p).toDF().agg(max("id"))
           .crossJoin(graft.osm.OsmPbf.ways(spark, p).toDF().agg(max("id"))).head()
-      case None => lineitem.agg(max("l_partkey"), max("l_orderkey")).head()
+      case None => existingEdges0.agg(max("enode"), max("eway")).head()
     }
     val maxExistingNode = maxRow.getLong(0)
     val maxExistingWay = maxRow.getLong(1)
@@ -603,15 +678,22 @@ object ChangegenPipeline {
     // In WKB mode each MULTI* part is its own feature (way), so a
     // MultiLineString's parts each become ways — exactly where the
     // reference raises NotImplementedError (generator.py:603-606).
-    val verts = lineWkb match {
-      case None => supplier.select(
-        (col("s_nationkey") % 5).as("feat"),
-        col("s_suppkey").as("vkey"),
-        ((col("s_suppkey") * 13 % 1000) / 10.0).as("x"),
-        ((col("s_suppkey") * 29 % 1000) / 10.0).as("y"))
+    // nodes: one per vertex, sequential ids from the configured offset.
+    // assign materializes its sorted frame internally (localCheckpoint)
+    // and counts every partition for the rank offsets, so the frame
+    // needs no second persist layer and the way-id base's vertex count
+    // is free
+    val (nodes, nVerts) = lineWkb match {
+      case None =>
+        val verts = Tables.load(spark, sfDir, "supplier").select(
+          (col("s_nationkey") % 5).as("feat"),
+          col("s_suppkey").as("vkey"),
+          ((col("s_suppkey") * 13 % 1000) / 10.0).as("x"),
+          ((col("s_suppkey") * 29 % 1000) / 10.0).as("y"))
+        SequentialIds.assignCounted(verts, "vkey", "node_id", nodeIdBase, negIds)
       case Some(src) =>
-        // persisted: SequentialIds runs multiple jobs over its input
-        // (same live-JDBC re-read contract as the polyWkb branch)
+        // persisted: both id assignments below read it (one read of a
+        // live JDBC source), and released once they have checkpointed
         val dec = src.select(col("lgroup").cast("long").as("lg"),
             posexplode(call_function("graft_geom_parts", col("wkb"))).as(Seq("pos", "v")))
           .select(col("lg"), col("v.part").cast("long").as("part"),
@@ -625,24 +707,19 @@ object ChangegenPipeline {
               .withColumn("fk", struct(col("lg"), col("part"))),
             "fk", "feat", 0L)
           .select(col("lg"), col("part"), col("feat"))
-        dec.join(featSeq, Seq("lg", "part"))
+        val verts = dec.join(featSeq, Seq("lg", "part"))
           .select(col("feat"),
             struct(col("lg"), col("part"), col("pos")).as("vkey"),
             col("x"), col("y"))
+        val assigned = SequentialIds.assignCounted(verts, "vkey", "node_id", nodeIdBase, negIds)
+        dec.unpersist()
+        assigned
     }
-
-    // nodes: one per vertex, sequential ids from the configured offset.
-    // assign materializes its sorted frame internally (localCheckpoint)
-    // and counts every partition for the rank offsets, so the frame
-    // needs no second persist layer and the way-id base's vertex count
-    // is free — the former nodes.count() job is gone (round 19)
-    val (nodes, nVerts) = SequentialIds.assignCounted(verts, "vkey", "node_id", nodeIdBase, negIds)
     // microdegrees ROUND half-up (the reference renders "%.6f", which
     // rounds) — identical to truncation for the exact-millionth 4326
     // inputs, and correct for reprojected layers whose doubles carry
     // series noise a hair below the exact value
-    val latU = graft.text.TextAnalysis.fp(col("y"), 6)
-    val lonU = graft.text.TextAnalysis.fp(col("x"), 6)
+    def fp6(c: Column) = graft.text.TextAnalysis.fp(c, 6)
 
     // way ids: clear of the assigned node-id range AND the existing way
     // ids; 1000 chunks per feature keeps (feat, chunk) → id injective
@@ -670,13 +747,13 @@ object ChangegenPipeline {
     // 6dp dedup to one node per coordinate, then vertex REUSE +
     // interior INSERT during way assembly. All windows are
     // feature-sized; the pair join is the same scale-safe grid join
-    // the registered cg_dwithin_lineline uses.
-    def fp6(c: org.apache.spark.sql.Column) = graft.text.TextAnalysis.fp(c, 6)
-    val (wayVertSrc, emittedLineNodes, selfJunctions) =
+    // the registered cg_dwithin_lineline uses. The cached frames are
+    // each read by more than one output and stay until release().
+    val (wayVertSrc, emittedLineNodes, selfJunctions, nSelf, selfCached) =
       if (!selfIntersect)
         (nodes.select(col("feat").as("way"), col("vkey").as("seq"), col("node_id").as("node")),
           nodes.select(col("node_id"), col("x"), col("y")),
-          nodes.select(col("node_id"), col("x"), col("y")).filter(lit(false)))
+          nodes.select(col("node_id"), col("x"), col("y")).filter(lit(false)), 0L, Nil)
       else {
         val posW = org.apache.spark.sql.expressions.Window
           .partitionBy("feat").orderBy("vkey")
@@ -703,17 +780,18 @@ object ChangegenPipeline {
           .distinct()
           .persist()
         // ONE junction node per distinct 6dp coordinate (the
-        // reference's round(COORDINATE_PRECISION) dict dedup)
-        val jn = SequentialIds.assign(
+        // reference's round(COORDINATE_PRECISION) dict dedup); reads
+        // the assignment's checkpoint, so it needs no cache of its own
+        val (jnIds, nJn) = SequentialIds.assignCounted(
           ipts.select("jx6", "jy6").distinct()
             .withColumn("jkey", struct(col("jx6"), col("jy6"))),
           "jkey", "node_id", selfNodeOffset, negIds)
+        val jn = jnIds
           .select(zoneGuard(col("node_id"), selfNodeOffset, selfNodeWindow, negIds,
               "--self junction nodes").as("node_id"),
             (col("jx6") / 1e6).as("x"), (col("jy6") / 1e6).as("y"),
             col("jx6"), col("jy6"))
-          .persist()
-        dbg(debug, s"stage 1b (--self): ${jn.count()} junction nodes at 6dp-distinct coordinates")
+        dbg(debug, s"stage 1b (--self): $nJn junction nodes at 6dp-distinct coordinates")
         // (a) vertex coincidence at 6dp: ANY feature's vertex at a
         // junction coordinate adopts the junction node id (the
         // reference's near-vertex rtree reuse, generator.py:429-440);
@@ -740,14 +818,16 @@ object ChangegenPipeline {
           .select(col("feat"), col("pos0"), coalesce(col("jnode"), col("node_id")).as("node_id"))
           .unionByName(toInsert)
           .select(col("feat").as("way"), col("pos0").as("seq"), col("node_id").as("node"))
+        // read by the create write's node section and the junction pass
         val emitted = replaced.filter(col("jnode").isNull)
           .select(col("node_id"), col("x"), col("y"))
           .unionByName(jn.select(col("node_id"), col("x"), col("y")))
           .persist()
-        (wv, emitted, jn.select(col("node_id"), col("x"), col("y")))
+        (wv, emitted, jn.select(col("node_id"), col("x"), col("y")), nJn,
+          Seq(posed, lines, ipts, replaced, emitted))
       }
     val nodeXml = emittedLineNodes.select(
-      OsmChangeXml.nodeXml(col("node_id"), lit(1), latU, lonU,
+      OsmChangeXml.nodeXml(col("node_id"), lit(1), fp6(col("y")), fp6(col("x")),
         map(lit("source"), lit("graft"))).as("xml"))
 
     // 2. ways: ordered node-id lists per feature, split at maxNodes.
@@ -757,32 +837,15 @@ object ChangegenPipeline {
     val wayId = (col("way") * 1000 + col("chunk_idx")) + lit(wayIdBase)
     val splitWays = WayOps.splitWay(ways, "nds", nodeLimit = maxNodes, segmentLen = math.max(1, maxNodes - 1))
       .withColumn("way_id", if (negIds) -wayId else wayId)
-      .persist()
-    val wayXml = splitWays.select(
+    // the frames counted for the summary line are observed by the one
+    // write job that reads them, so none of them is cached
+    val (writtenWays, nWays) = counted(splitWays)
+    val wayXml = writtenWays.select(
       OsmChangeXml.wayXml(col("way_id"), lit(1), col("chunk_nds"),
         map(lit("highway"), lit("path"))).as("xml"))
 
     // 3. junctions: new nodes near existing way nodes → insert into
-    // the existing ways' node lists (order-preserving). With osmSrc,
-    // both the way→node lists and the node coordinates come from the
-    // .pbf extract (lon→x, lat→y planar convention); synthetically,
-    // from the lineitem edge table.
-    val (existingEdges0, existingNodes0) = osmSrc match {
-      case Some(p) =>
-        val e = graft.osm.OsmPbf.ways(spark, p).toDF()
-          .select(col("id").as("eway"), posexplode(col("nds")).as(Seq("seq", "enode")))
-        val n = graft.osm.OsmPbf.nodes(spark, p).toDF()
-          .select(col("id").as("enode"), col("lon").as("ex"), col("lat").as("ey"))
-        (e, n)
-      case None =>
-        val e = lineitem.select(
-          col("l_orderkey").as("eway"), col("l_linenumber").as("seq"), col("l_partkey").as("enode"))
-        val n = e.select(
-          col("enode"),
-          ((col("enode") * 13 % 1000) / 10.0).as("ex"),
-          ((col("enode") * 29 % 1000) / 10.0).as("ey")).distinct()
-        (e, n)
-    }
+    // the existing ways' node lists (order-preserving).
     // --existing restriction: junction targets are the NAMED tables'
     // features only — vertex coordinates from the table geometry
     // (db.py runs its ST_DWithin against the table, not the extract),
@@ -803,61 +866,56 @@ object ChangegenPipeline {
       emittedLineNodes, "node_id", "x", "y",
       existingNodes, "enode", "ex", "ey", 0.5)
     // one junction per existing node: deterministic min node_id
-    val junctionAt = junctions.groupBy("enode").agg(min("node_id").as("jnode")).persist()
+    val junctionAt = junctions.groupBy("enode").agg(min("node_id").as("jnode"))
+    val (writtenJunctions, nJunctions) = counted(junctionAt)
     // splice each junction after its matched node. Junctions attach to
     // the EDGE rows, then ONE way-keyed aggregation rebuilds the node
-    // lists (round 19: the former wayNodeMap → posexplode → re-agg
-    // shape paid two corpus-wide collect_list shuffles on the same key
-    // to derive what one pass computes; (seq, node) is unique per way
-    // — lineitem's PK / posexplode ordinals — so sorting the joined
-    // edge rows by (seq, enode) is exactly the old explode-pos order)
+    // lists ((seq, node) is unique per way — lineitem's PK / posexplode
+    // ordinals — so sorting the joined edge rows by (seq, enode) is the
+    // way's node order)
     val modified = existingEdges
-      .join(junctionAt, Seq("enode"), "left")
+      .join(writtenJunctions, Seq("enode"), "left")
       .groupBy("eway")
       .agg(array_sort(collect_list(struct(col("seq"), col("enode"), col("jnode")))).as("pj"))
       .filter(exists(col("pj"), p => p.getField("jnode").isNotNull))
       .withColumn("new_nds", flatten(transform(col("pj"), p =>
         when(p.getField("jnode").isNotNull, array(p.getField("enode"), p.getField("jnode")))
           .otherwise(array(p.getField("enode"))))))
-      .persist()
-    val modifyXml = modified.select(
+    val (writtenModified, nModified) = counted(modified)
+    val modifyXml = writtenModified.select(
       OsmChangeXml.wayXml(col("eway"), lit(2), col("new_nds"), map()).as("xml"))
 
-    // 4. deletions: snapshot diff on orders → ways + constituent nodes
-    val orders = Tables.load(spark, sfDir, "orders")
-    // pinned above: nodes (checkpointed in assign), splitWays/
-    // junctionAt/modified/deleteSet (persisted) are each consumed
-    // twice (XML write + summary counts) — no recompute
-    val diffRemoved = SnapshotDiff.deletes(
-      orders.select(col("o_orderkey")),
-      orders.filter(col("o_orderkey") % 13 =!= 5).select(col("o_orderkey")),
-      Seq("o_orderkey"))
-    // discovered deletion tables (reference generate_deletions: each
-    // carries an osm_id column naming removed ways) union into the
-    // snapshot-diff-derived removals before node expansion
-    val removedWays =
-      if (deletionTables.isEmpty) diffRemoved // no extra distinct shuffle on the default path
-      else deletionTables
-        .map(p => (if (sfDir.startsWith("jdbc:")) Tables.jdbcTable(spark, sfDir, p)
-                   else spark.read.parquet(p))
-          .select(col("osm_id").cast("long").as("o_orderkey")))
-        .foldLeft(diffRemoved)((acc, d) => acc.unionByName(d))
-        .distinct()
+    // 4. deletions: discovered deletion tables (reference
+    // generate_deletions: each carries an osm_id column naming removed
+    // ways), plus — in the synthetic demo, without an extract — a
+    // snapshot diff on orders. Duplicates need no distinct: the semi
+    // join below ignores them.
+    val demoRemoved =
+      if (osmSrc.isDefined) Nil
+      else {
+        val orders = Tables.load(spark, sfDir, "orders")
+        Seq(SnapshotDiff.deletes(
+          orders.select(col("o_orderkey")),
+          orders.filter(col("o_orderkey") % 13 =!= 5).select(col("o_orderkey")),
+          Seq("o_orderkey")).select(col("o_orderkey").as("eway")))
+      }
+    val removedWays = demoRemoved ++ deletionTables.map(p =>
+      (if (sfDir.startsWith("jdbc:")) Tables.jdbcTable(spark, sfDir, p) else spark.read.parquet(p))
+        .select(col("osm_id").cast("long").as("eway")))
     // deletions expand against the FULL extract's edge table, not the
     // --existing-restricted one (the reference's deletion pass is a
-    // separate loop, independent of --existing). Derived straight from
-    // the edge rows filtered to the removed ways (round 19): the
-    // former path aggregated the WHOLE extract into way→nds arrays and
-    // re-exploded them — two corpus-wide passes to compute the two
-    // DISTINCT sets a removed-way-filtered edge scan yields directly.
-    val delEdges = existingEdges0
-      .join(removedWays.select(col("o_orderkey").as("eway")), Seq("eway"), "left_semi")
+    // separate loop, independent of --existing), straight from the
+    // edge rows filtered to the removed ways
+    val delEdges = removedWays.reduceOption(_ unionByName _) match {
+      case Some(r) => existingEdges0.join(r, Seq("eway"), "left_semi")
+      case None => existingEdges0.filter(lit(false))
+    }
     val deleteSet = delEdges
       .select(lit("node").as("elem_type"), col("enode").cast("long").as("elem_id")).distinct()
       .unionByName(
         delEdges.select(lit("way").as("elem_type"), col("eway").cast("long").as("elem_id")).distinct())
-      .persist()
-    val deleteXml = deleteSet.select(
+    val (writtenDeletes, nDeletes) = counted(deleteSet)
+    val deleteXml = writtenDeletes.select(
       when(col("elem_type") === "way",
         concat(lit("<way id=\""), col("elem_id"), lit("\" version=\"1\"/>")))
         .otherwise(concat(lit("<node id=\""), col("elem_id"), lit("\" version=\"1\" lat=\"0.000000\" lon=\"0.000000\"/>")))
@@ -877,9 +935,9 @@ object ChangegenPipeline {
     // together, so emitted <relation> members always reference way
     // ids that actually exist (refs from the positive base while way
     // ids negated was the round-2 referential-integrity bug)
-    def polyId(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    def polyId(c: Column): Column =
       (if (negIds) -c - nVerts - 200000L else c).cast("long")
-    val (polyNodes0, polyWays, polyRelations) = polyWkb match {
+    val (polyNodes0, nPolyNodes, polyWays, polyRelations, polyCached) = polyWkb match {
       case None =>
         val pverts = Tables.load(spark, sfDir, "part").select(
           (col("p_partkey") % 20).as("pgroup"),
@@ -887,7 +945,7 @@ object ChangegenPipeline {
           ((col("p_partkey") * 13 % 1000) / 10.0).as("x"),
           ((col("p_partkey") * 29 % 1000) / 10.0).as("y"))
         // no extra persist: assign checkpoints its frame internally
-        val pn = SequentialIds.assign(pverts, "pkey", "node_id", polyNodeOffset, negIds)
+        val (pn, npn) = SequentialIds.assignCounted(pverts, "pkey", "node_id", polyNodeOffset, negIds)
         // persisted: grouped feeds outer rings, inner rings AND the
         // relation frame — un-pinned it recomputed its exchange 4×
         val grouped = pn
@@ -905,15 +963,13 @@ object ChangegenPipeline {
         val pw = outerRings.unionByName(innerRings)
           .withColumn("closed_nds", concat(col("ring"), slice(col("ring"), 1, 1)))
           .withColumn("way_id", polyId(lit(polyWayBase) + col("pgroup") * 10 + col("ring_idx")))
-          .persist()
         val pr = grouped.filter(col("n") - col("n_outer") >= 3)
           .select(col("pgroup"),
             array(
               struct(polyId(lit(polyWayBase) + col("pgroup") * 10).as("ref"), lit("way").as("mtype"), lit("outer").as("role")),
               struct(polyId(lit(polyWayBase) + col("pgroup") * 10 + 1).as("ref"), lit("way").as("mtype"), lit("inner").as("role"))
             ).as("members"))
-          .persist()
-        (pn, pw, pr)
+        (pn, npn, pw, pr, Seq(grouped))
       case Some(src) =>
         // REAL geometry: decode every ring columnar — through the
         // PART-preserving decoder, so MultiPolygon rows (where the
@@ -925,25 +981,13 @@ object ChangegenPipeline {
         // the closing duplicate vertex is dropped before node-id
         // assignment and the way re-closes below from the assigned
         // ids. All windows are ring-sized partitions — nothing
-        // corpus-wide.
-        val decodedRaw = src.select(col("pgroup").cast("long").as("pgroup"),
+        // corpus-wide. Vertices reproject to WGS84 before ring
+        // closing and id assignment.
+        val decoded = toWgs84(src.select(col("pgroup").cast("long").as("pgroup"),
             posexplode(call_function("graft_geom_parts", col("wkb"))).as(Seq("pos", "v")))
           .select(col("pgroup"), col("pos").cast("long").as("pos"),
             col("v.part").as("part_idx"),
-            col("v.ring").as("ring_idx"), col("v.x").as("x"), col("v.y").as("y"))
-        // per-layer CRS (reference generator.py:69-78 builds its
-        // transformer from the layer's declared EPSG): reproject the
-        // decoded vertices to WGS84 before ring closing / id
-        // assignment. 4326 input skips the step entirely — the plan
-        // is unchanged for the already-geographic case. Ring-closing
-        // equality below is preserved either way: reprojection is a
-        // pure function, equal vertices stay equal.
-        val decoded =
-          if (polySrcEpsg == 4326) decodedRaw
-          else decodedRaw
-            .withColumn("_ll", graft.spatial.Geo.reproject(col("x"), col("y"), polySrcEpsg))
-            .withColumn("x", col("_ll.lon")).withColumn("y", col("_ll.lat"))
-            .drop("_ll")
+            col("v.ring").as("ring_idx"), col("v.x").as("x"), col("v.y").as("y")), polySrcEpsg)
         val ringW = org.apache.spark.sql.expressions.Window
           .partitionBy("pgroup", "part_idx", "ring_idx")
         // single consumer (the id assignment, which checkpoints its
@@ -957,10 +1001,10 @@ object ChangegenPipeline {
         // vertex → node id in (pgroup, pos) order — a STRUCT sort key,
         // so no arithmetic bound on vertices-per-feature (assign
         // checkpoints internally; no second persist layer)
-        val pn = SequentialIds.assign(
+        val (keyed, npn) = SequentialIds.assignCounted(
             open.withColumn("okey", struct(col("pgroup"), col("pos"))),
             "okey", "node_id", polyNodeOffset, negIds)
-          .drop("okey")
+        val pn = keyed.drop("okey")
         val ringsDf = pn.groupBy("pgroup", "part_idx", "ring_idx")
           .agg(array_sort(collect_list(struct(col("pos"), col("node_id")))).as("_kv"))
           .withColumn("ring", transform(col("_kv"), x => x.getField("node_id")))
@@ -968,14 +1012,14 @@ object ChangegenPipeline {
         // beyond the first AND parts beyond the first are first-class
         // (a polygon may carry any number of interior rings; a
         // MultiPolygon any number of parts), so no per-feature id
-        // arithmetic either
+        // arithmetic either. Not cached: the ways and the relations
+        // below each reread the assignment's checkpoint
         val pw = SequentialIds.assign(
             ringsDf.withColumn("rkey", struct(col("pgroup"), col("part_idx"), col("ring_idx"))),
             "rkey", "way_seq", 0L)
           .withColumn("way_id", polyId(lit(polyWayBase) + col("way_seq")))
           .drop("rkey", "way_seq")
           .withColumn("closed_nds", concat(col("ring"), slice(col("ring"), 1, 1)))
-          .persist()
         // reference generator.py:683: no interiors → plain closed
         // way; interiors → multipolygon relation, outer + one
         // inner-role member PER hole (generator.py:719-753).
@@ -990,51 +1034,42 @@ object ChangegenPipeline {
             struct(r.getField("way_id").as("ref"), lit("way").as("mtype"),
               when(r.getField("ring_idx") === 0, lit("outer")).otherwise(lit("inner")).as("role"))))
           .select(col("pgroup"), col("members"))
-          .persist()
-        (pn, pw, pr)
+        (pn, npn, pw, pr, Nil)
     }
     // zone guard rides the id column (see [[zoneGuard]] — the eager
     // count here was one extra job + materialization barrier per build)
     val polyNodes = polyNodes0.withColumn("node_id",
       zoneGuard(col("node_id"), polyNodeOffset, polyNodeWindow, negIds, "polygon ring nodes"))
-    dbg(debug, s"stage 4b (polygons): ${polyNodes.count()} ring nodes")
+    dbg(debug, s"stage 4b (polygons): $nPolyNodes ring nodes")
     // 4c. point features (reference generator.py:622-631, the
     // non-modify Point branch): one v1 <create> node per feature at
     // its reprojected coordinates, carrying the table-derived tags
     // (tags=feat_tags, UNFILTERED — unlike the modify branch, osm_id
     // stays a tag). No ways, no junctions, no relations.
-    val pointNodes = pointWkb match {
+    val (pointNodes, nPoints) = pointWkb match {
       case None =>
-        spark.range(0).select(col("id").as("node_id"),
+        (spark.range(0).select(col("id").as("node_id"),
           lit(0.0).as("x"), lit(0.0).as("y"),
-          map().cast("map<string,string>").as("ptags"))
+          map().cast("map<string,string>").as("ptags")), 0L)
       case Some(src) =>
-        val dec0 = src.select(col("pgrp").cast("long").as("pgrp"), col("ptags"),
+        val dec = toWgs84(src.select(col("pgrp").cast("long").as("pgrp"), col("ptags"),
             element_at(call_function("graft_geom_parts", col("wkb")), 1).as("_v"))
           // malformed WKB decodes to NULL — DROP the feature (the same
           // drop-don't-throw contract as the exploding line/poly seams,
           // where posexplode(null) yields zero rows)
           .filter(col("_v").isNotNull)
-          .select(col("pgrp"), col("ptags"), col("_v.x").as("x"), col("_v.y").as("y"))
-        val dec =
-          if (pointSrcEpsg == 4326) dec0
-          else dec0
-            .withColumn("_ll", graft.spatial.Geo.reproject(col("x"), col("y"), pointSrcEpsg))
-            .withColumn("x", col("_ll.lon")).withColumn("y", col("_ll.lat"))
-            .drop("_ll")
+          .select(col("pgrp"), col("ptags"), col("_v.x").as("x"), col("_v.y").as("y")), pointSrcEpsg)
         // assign materializes its frame internally (ONE read of a live
         // JDBC source) — no second persist layer needed
-        SequentialIds.assign(dec, "pgrp", "node_id", pointNodeOffset, negIds)
-          .select(col("node_id"), col("x"), col("y"), col("ptags"))
+        val (pn, n) = SequentialIds.assignCounted(dec, "pgrp", "node_id", pointNodeOffset, negIds)
+        (pn.select(col("node_id"), col("x"), col("y"), col("ptags")), n)
     }
     val pointNodeXml = pointNodes.select(
-      OsmChangeXml.nodeXml(col("node_id"), lit(1),
-        graft.text.TextAnalysis.fp(col("y"), 6), graft.text.TextAnalysis.fp(col("x"), 6),
+      OsmChangeXml.nodeXml(col("node_id"), lit(1), fp6(col("y")), fp6(col("x")),
         col("ptags")).as("xml"))
 
     val polyNodeXml = polyNodes.select(
-      OsmChangeXml.nodeXml(col("node_id"), lit(1),
-        graft.text.TextAnalysis.fp(col("y"), 6), graft.text.TextAnalysis.fp(col("x"), 6),
+      OsmChangeXml.nodeXml(col("node_id"), lit(1), fp6(col("y")), fp6(col("x")),
         map(lit("source"), lit("graft"))).as("xml"))
     val polyWayXml = polyWays.select(
       OsmChangeXml.wayXml(col("way_id"), lit(1), col("closed_nds"),
@@ -1049,6 +1084,10 @@ object ChangegenPipeline {
       wayXml.unionByName(polyWayXml), relXml,
       modifyXml, deleteXml,
       polyNodes, polyWays, polyRelations,
-      pointNodes, selfJunctions)
+      pointNodes, selfJunctions)(
+      Seq("nodes" -> (() => nVerts), "ways" -> nWays, "points" -> (() => nPoints),
+        "self_junctions" -> (() => nSelf), "junctions" -> nJunctions,
+        "modified" -> nModified, "deletes" -> nDeletes),
+      selfCached ++ polyCached)
   }
 }

@@ -29,7 +29,14 @@ object SequentialIds {
 
   /** Assign `idCol` = offset + rank (or offset - rank when `negative`),
     * rank starting at 0 in ascending order of `orderCol` (must be
-    * unique for determinism).
+    * unique for determinism). The input's other columns pass through.
+    *
+    * Not lazy: the call itself runs Spark jobs — the range sort
+    * materializes through `localCheckpoint`, and a partition-count
+    * `collect` over its blocks computes the rank offsets. The result
+    * reads the checkpoint, whose blocks live on the executors and do
+    * not survive the loss of one (a lost executor fails later reads
+    * instead of recomputing them).
     */
   def assign(df: DataFrame, orderCol: String, idCol: String, offset: Long, negative: Boolean = false): DataFrame =
     assignCounted(df, orderCol, idCol, offset, negative)._1
@@ -40,14 +47,18 @@ object SequentialIds {
     * way-id base). */
   def assignCounted(df: DataFrame, orderCol: String, idCol: String, offset: Long, negative: Boolean = false): (DataFrame, Long) = {
     val parts = math.max(df.rdd.getNumPartitions, 1)
+    // the layout column is named clear of the input's columns and of
+    // `idCol` (names resolve case-insensitively), so none is replaced
+    val taken = df.columns :+ idCol
+    val mono = Iterator.from(0).map(i => s"_mono$i").find(c => !taken.exists(_.equalsIgnoreCase(c))).get
     val sorted = df.repartitionByRange(parts, col(orderCol))
       .sortWithinPartitions(orderCol)
-      .withColumn("_mono", monotonically_increasing_id())
+      .withColumn(mono, monotonically_increasing_id())
       .localCheckpoint()
     // rank offset of each partition = rows in partitions before it;
     // partition id and in-partition index unpack from the mono id
-    val pid = shiftright(col("_mono"), 33)
-    val localIdx = col("_mono").bitwiseAND(lit((1L << 33) - 1))
+    val pid = shiftright(col(mono), 33)
+    val localIdx = col(mono).bitwiseAND(lit((1L << 33) - 1))
     val counts = sorted.groupBy(pid.as("_pid")).agg(count(lit(1)).as("_n"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     val offsets: Map[Long, Long] = counts
@@ -55,6 +66,6 @@ object SequentialIds {
       .drop(1).map { case (p, before, _) => p -> before }.toMap
     val rank = coalesce(element_at(typedLit(offsets), pid), lit(0L)) + localIdx
     val id = if (negative) lit(offset) - rank else lit(offset) + rank
-    (sorted.withColumn(idCol, id.cast("long")).drop("_mono"), counts.map(_._2).sum)
+    (sorted.withColumn(idCol, id.cast("long")).drop(mono), counts.map(_._2).sum)
   }
 }

@@ -25,6 +25,27 @@ class OperatorsSpec extends AnyFunSuite {
     assert(down == Map(10L -> -5L, 20L -> -6L, 30L -> -7L))
   }
 
+  test("SequentialIds matches a row_number reference over 24 range partitions from partly empty input; input columns survive") {
+    import org.apache.spark.sql.expressions.Window
+    // 24 unique keys over 32 input partitions, 8 of them empty; the
+    // range sort samples every key, so each key gets its own partition
+    // and the ids cross 23 partition boundaries
+    val df = spark.range(0, 24, 1, 32)
+      .select(((col("id") * 7) % 24 * 10).as("k"), col("id").as("_mono"), col("id").as("_MONO0"))
+    assert(df.groupBy(spark_partition_id()).count().count() < df.rdd.getNumPartitions)
+    val ref = df.select(col("k"), (row_number().over(Window.orderBy("k")) - 1).as("rank"))
+      .as[(Long, Long)].collect().toMap
+    for ((offset, negative) <- Seq((1000L, false), (-1L, true))) {
+      val out = SequentialIds.assign(df, "k", "id", offset, negative)
+      assert(out.rdd.getNumPartitions >= 8, s"${out.rdd.getNumPartitions} range partitions")
+      assert(out.columns.toSeq == Seq("k", "_mono", "_MONO0", "id"), out.columns.mkString(","))
+      val got = out.select("k", "id", "_mono", "_MONO0").as[(Long, Long, Long, Long)].collect()
+      assert(got.forall { case (k, _, a, b) => a == b && (a * 7) % 24 * 10 == k }, "input columns overwritten")
+      val want = ref.map { case (k, r) => k -> (if (negative) offset - r else offset + r) }
+      assert(got.map(r => r._1 -> r._2).toMap == want)
+    }
+  }
+
   test("TagOps hstore parse + column precedence merge") {
     val df = Seq(("""  "a"=>"1", "b"=>"2"  """, "colA")).toDF("hs", "a")
     val out = df.select(

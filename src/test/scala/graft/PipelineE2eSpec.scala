@@ -88,9 +88,9 @@ class PipelineE2eSpec extends AnyFunSuite {
     assert(doomed.nonEmpty)
     doomed.toDF("osm_id").write.parquet(s"$tmp/custom_deletions.parquet")
 
-    val found = ChangegenPipeline.discoverDeletionTables(tmp, "_deletions")
+    val found = ChangegenPipeline.discoverTables(tmp, "_deletions")
     assert(found.map(new java.io.File(_).getName) == Seq("custom_deletions.parquet"))
-    assert(ChangegenPipeline.discoverDeletionTables(tmp, "_nope").isEmpty)
+    assert(ChangegenPipeline.discoverTables(tmp, "_nope").isEmpty)
 
     val f = ChangegenPipeline.build(spark, tmp, maxNodes = 7,
       idOffset = Some(1000000L), deletionTables = found)
@@ -363,7 +363,7 @@ class PipelineE2eSpec extends AnyFunSuite {
     // SCHEMA-QUALIFIED (Derby's default schema is APP), so the
     // read-back targets the discovered table rather than resolving
     // the bare name through search_path on a multi-schema database
-    assert(ChangegenPipeline.discoverDeletionTables(url, "_deletions")
+    assert(ChangegenPipeline.discoverTables(url, "_deletions")
       == Seq("app.custom_deletions"))
 
     // the FULL CLI path (run() is main() minus session lifecycle),
@@ -811,5 +811,104 @@ class PipelineE2eSpec extends AnyFunSuite {
         features = Seq(("ghost_new", feats, 2))).modifyXml.count()
     }
     assert(e.getMessage.contains("999999999"), e.getMessage)
+  }
+  test("run's summary line comes from the write: no job after the writer, counts equal the frames, no cache left") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.SparkInternals
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val tmp = Files.createTempDirectory("graft_cli_jobs").toString
+    def frameCounts(f: ChangegenPipeline.Frames): Seq[Long] =
+      try Seq(f.nodes, f.splitWays, f.pointNodes, f.selfJunctions, f.junctionAt, f.modified, f.deleteSet)
+        .map(_.count())
+      finally f.release()
+    def lineBuild(self: Boolean) = () => ChangegenPipeline.build(spark, TestSpark.Sf, maxNodes = 7,
+      idOffset = Some(1000000L), selfIntersect = self)
+    val base = Seq("--max-nodes-per-way=7", "--id-offset=1000000")
+    val shapes = Seq(
+      ("single", base, lineBuild(false)),
+      ("sharded", base :+ "--shards=2", lineBuild(false)),
+      ("self", base :+ "--self=true", lineBuild(true)),
+      ("modify_meta", Seq("--modify-meta"), () => ChangegenPipeline.buildModifyOnly(spark, TestSpark.Sf)))
+    val summary = ("""\[changegen\] wrote \S+: nodes=(\d+) ways=(\d+) points=(\d+) """ +
+      """self_junctions=(\d+) junctions=(\d+) modified=(\d+) deletes=(\d+)""").r
+    shapes.foreach { case (shape, flags, rebuild) =>
+      val want = frameCounts(rebuild())
+      // job id -> call site: a SQL execution's jobs (adaptive execution
+      // submits some from its own threads) take its action's call site
+      val sites = scala.collection.mutable.Map[Long, String]()
+      val jobs = scala.collection.mutable.ArrayBuffer[(Int, String)]()
+      val listener = new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart => sites(s.executionId) = s.description
+          case _ =>
+        }
+        override def onJobStart(e: SparkListenerJobStart): Unit = {
+          val p = Option(e.properties)
+          jobs += e.jobId -> p.flatMap(x => Option(x.getProperty("spark.sql.execution.id")))
+            .flatMap(id => sites.get(id.toLong))
+            .orElse(p.flatMap(x => Option(x.getProperty("callSite.short")))).getOrElse("")
+        }
+      }
+      SparkInternals.drainListeners(spark)
+      val cachedBefore = SparkInternals.cachedEntries(spark)
+      val log = new java.io.ByteArrayOutputStream()
+      sc.addSparkListener(listener)
+      try Console.withOut(new java.io.PrintStream(log, true, "UTF-8")) {
+        ChangegenPipeline.run((Seq(TestSpark.Sf, s"$tmp/$shape.osc") ++ flags).toArray, spark)
+      } finally {
+        SparkInternals.drainListeners(spark)
+        sc.removeSparkListener(listener)
+      }
+      val writer = jobs.filter(_._2.contains("OsmChangeXml.scala")).map(_._1)
+      assert(writer.nonEmpty, s"$shape: no writer job among ${jobs.mkString(", ")}")
+      val after = jobs.filter(_._1 > writer.max)
+      assert(after.isEmpty, s"$shape: ${after.size} job(s) after the write: ${after.mkString(", ")}")
+      val got = summary.findFirstMatchIn(log.toString("UTF-8"))
+        .map(_.subgroups.map(_.toLong)).getOrElse(fail(s"$shape: no summary line in ${log.toString("UTF-8")}"))
+      assert(got == want, s"$shape: summary $got, frames $want")
+      assert(SparkInternals.cachedEntries(spark) == cachedBefore,
+        s"$shape: ${SparkInternals.cachedEntries(spark) - cachedBefore} cache entries left by the build")
+    }
+  }
+
+  test("a real-input run reads only its inputs: no demo tables needed, no demo features, no orders-diff deletes") {
+    import spark.implicits._
+    import graft.functions.WkbGeomExpr
+    import graft.osm.{OsmModel, OsmPbf}
+    val tmp = Files.createTempDirectory("graft_cli_real").toString
+    // extract ways 5 and 6: 5 is a key the demo orders diff removes
+    // (o_orderkey % 13 == 5), so it would land in <delete> if the diff ran
+    val pbf = Files.createTempFile("graft_real", ".osm.pbf").toString
+    OsmPbf.write(pbf, Seq(OsmModel.Node(1L, 1, 10.0, 10.0, Map.empty), OsmModel.Node(2L, 1, 10.0, 11.0, Map.empty),
+        OsmModel.Node(3L, 1, 20.0, 10.0, Map.empty), OsmModel.Node(4L, 1, 20.0, 11.0, Map.empty)),
+      Seq(OsmModel.Way(5L, 1, Seq(1L, 2L), Map.empty), OsmModel.Way(6L, 1, Seq(3L, 4L), Map.empty)), Nil)
+    // the only feature input: one three-vertex road far from the extract
+    Seq((1L, WkbGeomExpr.encode(2, Array((50.0, 50.0), (50.5, 50.0), (51.0, 50.0)))))
+      .toDF("osm_id", "wkb_geometry").write.parquet(s"$tmp/roads_new.parquet")
+    def runDoc(name: String): String = {
+      val out = s"$tmp/$name.osc"
+      val log = new java.io.ByteArrayOutputStream()
+      Console.withOut(new java.io.PrintStream(log, true, "UTF-8")) {
+        ChangegenPipeline.run(Array(tmp, out, "--suffix=_new", s"--osmsrc=$pbf"), spark)
+      }
+      // frames the write found empty still report their zero counts
+      assert(log.toString("UTF-8").contains(
+        "nodes=3 ways=1 points=0 self_junctions=0 junctions=0 modified=0 deletes=0"), log.toString("UTF-8"))
+      new String(Files.readAllBytes(Paths.get(out)), "UTF-8")
+    }
+    // only feature tables in the directory: the run succeeds and emits
+    // just the road — no demo polygons fill the absent polygon class
+    val doc = runDoc("features_only")
+    assert("<node id=".r.findAllIn(doc).size == 3 && "<way id=".r.findAllIn(doc).size == 1, doc)
+    assert(!doc.contains("area") && !doc.contains("<relation"), doc)
+    // an orders table beside them changes nothing: the demo snapshot
+    // diff applies only without an extract
+    Files.copy(Paths.get(s"${TestSpark.Sf}/orders.parquet"), Paths.get(s"$tmp/orders.parquet"))
+    assert(spark.read.parquet(s"$tmp/orders.parquet").filter("o_orderkey = 5").count() == 1)
+    val withOrders = runDoc("with_orders")
+    assert(!withOrders.contains("<way id=\"5\""), withOrders)
+    assert(withOrders == doc)
+    Files.deleteIfExists(Paths.get(pbf))
   }
 }
