@@ -234,12 +234,20 @@ object ChangegenPipeline {
     * the synthetic demo features and tables are read only by runs
     * without feature inputs.
     *
-    * Jobs: building the frames runs Spark jobs — ids materialize
-    * eagerly through `localCheckpoint` plus a partition-count
-    * `collect` (see [[build]]), and local-checkpoint blocks do not
-    * survive the loss of an executor. The summary line reads counts
-    * the write observed, so no job runs after the write; the build's
-    * caches are released once it ends, failed or not. */
+    * Jobs: every job carries exactly one `graft-cg-<stage>` job tag
+    * (see [[JobStages]]). The discovered tables are read and classified
+    * at once, one thread each (`classify`). Building the frames runs
+    * jobs: the calling thread's are tagged `build`, and the id chains
+    * and the max-id probe run at once under their own tags (see
+    * [[build]]); ids materialize eagerly through `localCheckpoint`, and
+    * local-checkpoint blocks do not survive the loss of an executor.
+    * The single-file write renders its sections at once (`create`,
+    * `modify`, `delete`, see [[OsmChangeXml.write]]); the sharded write
+    * is tagged `write`. When one of a set of concurrent stages fails,
+    * the others' jobs are cancelled by tag and awaited before its error
+    * is rethrown. The summary line reads counts the write observed, so
+    * no job runs after the write; the build's caches are released once
+    * it ends, failed or not. */
   def run(args: Array[String], spark: SparkSession): Unit = {
     val (flagArgs, pos) = args.partition(_.startsWith("--"))
     val parsedFlags = flagArgs.map { f =>
@@ -341,10 +349,12 @@ object ChangegenPipeline {
         s"--suffix=${suffixes.mkString(",")} discovered no feature tables in $sfDir")
       println(s"[changegen] found feature tables: ${discovered.mkString(", ")}")
     }
-    val discoveredFrames = discovered.map { n =>
-      val df = featureTable(spark, sfDir, n)
-      (n, df, tableGeomClass(df, n))
-    }
+    val discoveredFrames = JobStages.concurrently(spark, discovered.map { n =>
+      "classify" -> (() => {
+        val df = featureTable(spark, sfDir, n)
+        (n, df, tableGeomClass(df, n))
+      })
+    })
 
     // per-feature id of a discovered table: resolved BY NAME (osm_id —
     // the reference's id field), falling back to the first column only
@@ -364,7 +374,7 @@ object ChangegenPipeline {
     // a run given feature inputs emits only those: no demo features
     // fill the geometry classes it leaves out
     val featureInput = suffixes.nonEmpty || flags.contains("poly-table") || flags.contains("line-table")
-    val f =
+    val f = JobStages.tagged(spark, "build") {
       if (modifyMeta) buildModifyOnly(spark, sfDir, osmSrc, discoveredFrames, hstoreCol)
       else {
         // suffix-discovered tables route to the line/poly seams by
@@ -419,6 +429,7 @@ object ChangegenPipeline {
           seamUnion(2, flags.get("line-table"), "lgroup"), existingWkb,
           pointWkb, selfIntersect = selfIntersect, debug = debug)
       }
+    }
 
     // 5. assemble the OsmChange document (creates = nodes then ways)
     dbg(debug, s"stage 5 (write): assembling OsmChange document -> $out" +
@@ -428,11 +439,13 @@ object ChangegenPipeline {
       if (shards > 0) {
         def sec(df: DataFrame, s: String) = df.select(
           pmod(xxhash64(col("xml")), lit(shards)).cast("int").as("shard"), lit(s).as("section"), col("xml"))
-        OsmChangeXml.writeSharded(out,
-          sec(f.nodeXml, "create").unionByName(sec(f.wayXml, "create"))
-            .unionByName(sec(f.relXml, "create"))
-            .unionByName(sec(f.modifyXml, "modify")).unionByName(sec(f.deleteXml, "delete")),
-          shards, gzip = forceGzip)
+        JobStages.tagged(spark, "write") {
+          OsmChangeXml.writeSharded(out,
+            sec(f.nodeXml, "create").unionByName(sec(f.wayXml, "create"))
+              .unionByName(sec(f.relXml, "create"))
+              .unionByName(sec(f.modifyXml, "modify")).unionByName(sec(f.deleteXml, "delete")),
+            shards, gzip = forceGzip)
+        }
       } else
         OsmChangeXml.write(out, f.nodeXml.unionByName(f.wayXml).unionByName(f.relXml),
           Some(f.modifyXml), Some(f.deleteXml), gzip = forceGzip || out.endsWith(".gz"))
@@ -597,16 +610,23 @@ object ChangegenPipeline {
     * (generator.py:449-476) — so two crossing new features share one
     * node id in the changefile.
     *
-    * Jobs: building the frames is not lazy. One aggregate job reads
-    * the max existing ids, and every sequential id assignment (line
-    * vertices, line features of `lineWkb`, `--self` junctions, polygon
-    * nodes and ways, points) materializes eagerly through
-    * `localCheckpoint` plus a partition-count `collect` (see
-    * [[graft.operators.SequentialIds.assign]]). The returned frames
-    * read those checkpoints, whose blocks live on the executors and do
-    * not survive the loss of one. The `--self` and synthetic-polygon
-    * frames that several outputs read stay cached until
-    * [[Frames.release]]. */
+    * Jobs: building the frames is not lazy. Four stages run at once,
+    * each on its own thread with its jobs tagged `graft-cg-<stage>`
+    * (see [[JobStages]]): `max-ids`, one aggregate job over the max
+    * existing ids, and the id chains `lines` (line features of
+    * `lineWkb`, then line vertices), `polygons` (ring nodes, then WKB
+    * ring ways) and `points`. Each chain's sequential id assignments
+    * materialize eagerly through `localCheckpoint` plus one counting
+    * job (see [[graft.operators.SequentialIds.assign]]) and rank from
+    * 0; the zone offsets, which need the max ids and the line vertex
+    * count, are added as column expressions once all four are done, so
+    * the ids equal a serial assignment. If one stage fails, the others'
+    * jobs are cancelled and awaited, and its error is rethrown. The
+    * `--self` junction ids are assigned after that, on the calling
+    * thread. The returned frames read the checkpoints, whose blocks
+    * live on the executors and do not survive the loss of one. The
+    * `--self` and synthetic-polygon frames that several outputs read
+    * stay cached until [[Frames.release]]. */
   def build(spark: SparkSession, sfDir: String, maxNodes: Int = 500,
             idOffset: Option[Long] = None, negIds: Boolean = false,
             osmSrc: Option[String] = None,
@@ -648,49 +668,39 @@ object ChangegenPipeline {
     // id already present in the "existing" data — derive the node-id
     // offset from the observed max when the caller kept the default.
     // ONE combined agg job for both maxes (not two serial jobs).
-    val maxRow = osmSrc match {
-      case Some(p) =>
-        graft.osm.OsmPbf.nodes(spark, p).toDF().agg(max("id"))
-          .crossJoin(graft.osm.OsmPbf.ways(spark, p).toDF().agg(max("id"))).head()
-      case None => existingEdges0.agg(max("enode"), max("eway")).head()
+    def maxIds(): (Long, Long) = {
+      val r = osmSrc match {
+        case Some(p) =>
+          graft.osm.OsmPbf.nodes(spark, p).toDF().agg(max("id"))
+            .crossJoin(graft.osm.OsmPbf.ways(spark, p).toDF().agg(max("id"))).head()
+        case None => existingEdges0.agg(max("enode"), max("eway")).head()
+      }
+      (r.getLong(0), r.getLong(1))
     }
-    val maxExistingNode = maxRow.getLong(0)
-    val maxExistingWay = maxRow.getLong(1)
-    dbg(debug, s"stage 0 (ids): existing max node id=$maxExistingNode, max way id=$maxExistingWay")
-    // negative mode descends from -1 (never collides with positive OSM
-    // ids); positive mode starts above both the flag and the observed max
-    val nodeIdBase =
-      if (negIds) -1L
-      else idOffset.getOrElse(math.max(1000000L, maxExistingNode + 1))
-    // pre-write collision validation (reference __main__.py:198-207):
-    // an EXPLICIT offset at or below the observed max existing id
-    // would hand out ids that already exist — warn, or stop the run
-    // under noCollisions (the reference's --no_collisions fatal path)
-    if (!negIds && idOffset.exists(off => off <= maxExistingNode || off <= maxExistingWay)) {
-      val msg = s"Chosen ID offset ${idOffset.get} may cause collisions with existing " +
-        s"OSM IDs (max node id: $maxExistingNode, max way id: $maxExistingWay)"
-      if (noCollisions) throw new IllegalStateException(msg)
-      else System.err.println(s"[changegen] WARNING: $msg")
-    }
+
+    // The three id chains below (line vertices, polygon rings, points)
+    // rank their rows from 0 and run at once with the max-id probe. Their
+    // id offsets need the probe's max ids and the line vertex count, so
+    // `offset ± rank` is added as a column expression once all four are
+    // done — the ids equal a serial assignment from those offsets.
 
     // 1. new features: per-group linestrings — synthetically from
     // supplier points, or decoded from WKB when `lineWkb` is given.
     // In WKB mode each MULTI* part is its own feature (way), so a
     // MultiLineString's parts each become ways — exactly where the
     // reference raises NotImplementedError (generator.py:603-606).
-    // nodes: one per vertex, sequential ids from the configured offset.
-    // assign materializes its sorted frame internally (localCheckpoint)
-    // and counts every partition for the rank offsets, so the frame
-    // needs no second persist layer and the way-id base's vertex count
-    // is free
-    val (nodes, nVerts) = lineWkb match {
+    // nodes: one per vertex, ranked in vertex-key order. assign
+    // materializes its sorted frame internally (localCheckpoint) and
+    // counts every partition for the rank offsets, so the frame needs no
+    // second persist layer and the way-id base's vertex count is free
+    def lineRanks(): (DataFrame, Long) = lineWkb match {
       case None =>
         val verts = Tables.load(spark, sfDir, "supplier").select(
           (col("s_nationkey") % 5).as("feat"),
           col("s_suppkey").as("vkey"),
           ((col("s_suppkey") * 13 % 1000) / 10.0).as("x"),
           ((col("s_suppkey") * 29 % 1000) / 10.0).as("y"))
-        SequentialIds.assignCounted(verts, "vkey", "node_id", nodeIdBase, negIds)
+        SequentialIds.assignCounted(verts, "vkey", "node_id", 0L)
       case Some(src) =>
         // persisted: both id assignments below read it (one read of a
         // live JDBC source), and released once they have checkpointed
@@ -711,10 +721,121 @@ object ChangegenPipeline {
           .select(col("feat"),
             struct(col("lg"), col("part"), col("pos")).as("vkey"),
             col("x"), col("y"))
-        val assigned = SequentialIds.assignCounted(verts, "vkey", "node_id", nodeIdBase, negIds)
-        dec.unpersist()
-        assigned
+        try SequentialIds.assignCounted(verts, "vkey", "node_id", 0L)
+        finally dec.unpersist()
     }
+
+    // 4b. polygon ring vertices (rings and relations are built in 4b
+    // below): ranked from the part table synthetically, or decoded from
+    // WKB — where the ring way sequence is ranked here too, and the
+    // third value holds those rings
+    def polyRanks(): (DataFrame, Long, Option[DataFrame]) = polyWkb match {
+      case None =>
+        val pverts = Tables.load(spark, sfDir, "part").select(
+          (col("p_partkey") % 20).as("pgroup"),
+          col("p_partkey").as("pkey"),
+          ((col("p_partkey") * 13 % 1000) / 10.0).as("x"),
+          ((col("p_partkey") * 29 % 1000) / 10.0).as("y"))
+        // no extra persist: assign checkpoints its frame internally
+        val (pn, npn) = SequentialIds.assignCounted(pverts, "pkey", "node_id", 0L)
+        (pn, npn, None)
+      case Some(src) =>
+        // REAL geometry: decode every ring columnar — through the
+        // PART-preserving decoder, so MultiPolygon rows (where the
+        // reference raises NotImplementedError, generator.py:603-606)
+        // route each part's rings into ways and ONE multipolygon
+        // relation per feature (multiple outer members is valid OSM).
+        // PostGIS rings arrive closed (first vertex repeated last);
+        // OSM closes a ring by re-REFERENCING the first node id, so
+        // the closing duplicate vertex is dropped before node-id
+        // assignment and the way re-closes in 4b from the assigned
+        // ids. All windows are ring-sized partitions — nothing
+        // corpus-wide. Vertices reproject to WGS84 before ring
+        // closing and id assignment.
+        val decoded = toWgs84(src.select(col("pgroup").cast("long").as("pgroup"),
+            posexplode(call_function("graft_geom_parts", col("wkb"))).as(Seq("pos", "v")))
+          .select(col("pgroup"), col("pos").cast("long").as("pos"),
+            col("v.part").as("part_idx"),
+            col("v.ring").as("ring_idx"), col("v.x").as("x"), col("v.y").as("y")), polySrcEpsg)
+        val ringW = org.apache.spark.sql.expressions.Window
+          .partitionBy("pgroup", "part_idx", "ring_idx")
+        // single consumer (the id assignment, which checkpoints its
+        // input's result internally — ONE read of a live JDBC source)
+        val open = decoded
+          .withColumn("_f", min(struct(col("pos"), col("x"), col("y"))).over(ringW))
+          .withColumn("_maxp", max("pos").over(ringW))
+          .filter(!(col("pos") === col("_maxp") && col("pos") =!= col("_f").getField("pos") &&
+            col("x") === col("_f").getField("x") && col("y") === col("_f").getField("y")))
+          .drop("_f", "_maxp")
+        // vertex → node rank in (pgroup, pos) order — a STRUCT sort key,
+        // so no arithmetic bound on vertices-per-feature (assign
+        // checkpoints internally; no second persist layer)
+        val (keyed, npn) = SequentialIds.assignCounted(
+            open.withColumn("okey", struct(col("pgroup"), col("pos"))),
+            "okey", "node_id", 0L)
+        val pn = keyed.drop("okey")
+        val ringsDf = pn.groupBy("pgroup", "part_idx", "ring_idx")
+          .agg(array_sort(collect_list(struct(col("pos"), col("node_id")))).as("_kv"))
+          .select(col("pgroup"), col("part_idx"), col("ring_idx"),
+            transform(col("_kv"), x => x.getField("node_id")).as("ring"))
+        // sequential way ranks in (pgroup, part, ring) order — holes
+        // beyond the first AND parts beyond the first are first-class
+        // (a polygon may carry any number of interior rings; a
+        // MultiPolygon any number of parts), so no per-feature id
+        // arithmetic either. Not cached: the ways and the relations
+        // in 4b each reread the assignment's checkpoint
+        val rings = SequentialIds.assign(
+            ringsDf.withColumn("rkey", struct(col("pgroup"), col("part_idx"), col("ring_idx"))),
+            "rkey", "way_seq", 0L)
+          .drop("rkey")
+        (pn, npn, Some(rings))
+    }
+
+    // 4c. point features (reference generator.py:622-631, the
+    // non-modify Point branch): one v1 <create> node per feature at
+    // its reprojected coordinates, ranked by feature key
+    def pointRanks(): Option[(DataFrame, Long)] = pointWkb.map { src =>
+      val dec = toWgs84(src.select(col("pgrp").cast("long").as("pgrp"), col("ptags"),
+          element_at(call_function("graft_geom_parts", col("wkb")), 1).as("_v"))
+        // malformed WKB decodes to NULL — DROP the feature (the same
+        // drop-don't-throw contract as the exploding line/poly seams,
+        // where posexplode(null) yields zero rows)
+        .filter(col("_v").isNotNull)
+        .select(col("pgrp"), col("ptags"), col("_v.x").as("x"), col("_v.y").as("y")), pointSrcEpsg)
+      // assign materializes its frame internally (ONE read of a live
+      // JDBC source) — no second persist layer needed
+      SequentialIds.assignCounted(dec, "pgrp", "node_id", 0L)
+    }
+
+    val chains = new JobStages.Group(spark)
+    val maxIdsDone = chains.start("max-ids")(maxIds())
+    val linesDone = chains.start("lines")(lineRanks())
+    val polysDone = chains.start("polygons")(polyRanks())
+    val pointsDone = chains.start("points")(pointRanks())
+    chains.await()
+
+    val (maxExistingNode, maxExistingWay) = maxIdsDone()
+    dbg(debug, s"stage 0 (ids): existing max node id=$maxExistingNode, max way id=$maxExistingWay")
+    // negative mode descends from -1 (never collides with positive OSM
+    // ids); positive mode starts above both the flag and the observed max
+    val nodeIdBase =
+      if (negIds) -1L
+      else idOffset.getOrElse(math.max(1000000L, maxExistingNode + 1))
+    // pre-write collision validation (reference __main__.py:198-207):
+    // an EXPLICIT offset at or below the observed max existing id
+    // would hand out ids that already exist — warn, or stop the run
+    // under noCollisions (the reference's --no_collisions fatal path)
+    if (!negIds && idOffset.exists(off => off <= maxExistingNode || off <= maxExistingWay)) {
+      val msg = s"Chosen ID offset ${idOffset.get} may cause collisions with existing " +
+        s"OSM IDs (max node id: $maxExistingNode, max way id: $maxExistingWay)"
+      if (noCollisions) throw new IllegalStateException(msg)
+      else System.err.println(s"[changegen] WARNING: $msg")
+    }
+    // the id a rank gets in the zone starting at `base`: base + rank, or
+    // base - rank descending in negative mode
+    def idFrom(base: Long)(rank: Column): Column = if (negIds) lit(base) - rank else lit(base) + rank
+    val (lineRanked, nVerts) = linesDone()
+    val nodes = lineRanked.withColumn("node_id", idFrom(nodeIdBase)(col("node_id")))
     // microdegrees ROUND half-up (the reference renders "%.6f", which
     // rounds) — identical to truncation for the exact-millionth 4326
     // inputs, and correct for reprojected layers whose doubles carry
@@ -937,18 +1058,14 @@ object ChangegenPipeline {
     // ids negated was the round-2 referential-integrity bug)
     def polyId(c: Column): Column =
       (if (negIds) -c - nVerts - 200000L else c).cast("long")
-    val (polyNodes0, nPolyNodes, polyWays, polyRelations, polyCached) = polyWkb match {
+    val polyIdFrom = idFrom(polyNodeOffset) _
+    val (polyRanked, nPolyNodes, wkbRings) = polysDone()
+    val polyNodes0 = polyRanked.withColumn("node_id", polyIdFrom(col("node_id")))
+    val (polyWays, polyRelations, polyCached) = wkbRings match {
       case None =>
-        val pverts = Tables.load(spark, sfDir, "part").select(
-          (col("p_partkey") % 20).as("pgroup"),
-          col("p_partkey").as("pkey"),
-          ((col("p_partkey") * 13 % 1000) / 10.0).as("x"),
-          ((col("p_partkey") * 29 % 1000) / 10.0).as("y"))
-        // no extra persist: assign checkpoints its frame internally
-        val (pn, npn) = SequentialIds.assignCounted(pverts, "pkey", "node_id", polyNodeOffset, negIds)
         // persisted: grouped feeds outer rings, inner rings AND the
         // relation frame — un-pinned it recomputed its exchange 4×
-        val grouped = pn
+        val grouped = polyNodes0
           .groupBy("pgroup")
           .agg(array_sort(collect_list(struct(col("pkey"), col("node_id")))).as("_kv"))
           .withColumn("ring_nds", transform(col("_kv"), x => x.getField("node_id")))
@@ -969,56 +1086,14 @@ object ChangegenPipeline {
               struct(polyId(lit(polyWayBase) + col("pgroup") * 10).as("ref"), lit("way").as("mtype"), lit("outer").as("role")),
               struct(polyId(lit(polyWayBase) + col("pgroup") * 10 + 1).as("ref"), lit("way").as("mtype"), lit("inner").as("role"))
             ).as("members"))
-        (pn, npn, pw, pr, Seq(grouped))
-      case Some(src) =>
-        // REAL geometry: decode every ring columnar — through the
-        // PART-preserving decoder, so MultiPolygon rows (where the
-        // reference raises NotImplementedError, generator.py:603-606)
-        // route each part's rings into ways and ONE multipolygon
-        // relation per feature (multiple outer members is valid OSM).
-        // PostGIS rings arrive closed (first vertex repeated last);
-        // OSM closes a ring by re-REFERENCING the first node id, so
-        // the closing duplicate vertex is dropped before node-id
-        // assignment and the way re-closes below from the assigned
-        // ids. All windows are ring-sized partitions — nothing
-        // corpus-wide. Vertices reproject to WGS84 before ring
-        // closing and id assignment.
-        val decoded = toWgs84(src.select(col("pgroup").cast("long").as("pgroup"),
-            posexplode(call_function("graft_geom_parts", col("wkb"))).as(Seq("pos", "v")))
-          .select(col("pgroup"), col("pos").cast("long").as("pos"),
-            col("v.part").as("part_idx"),
-            col("v.ring").as("ring_idx"), col("v.x").as("x"), col("v.y").as("y")), polySrcEpsg)
-        val ringW = org.apache.spark.sql.expressions.Window
-          .partitionBy("pgroup", "part_idx", "ring_idx")
-        // single consumer (the id assignment, which checkpoints its
-        // input's result internally — ONE read of a live JDBC source)
-        val open = decoded
-          .withColumn("_f", min(struct(col("pos"), col("x"), col("y"))).over(ringW))
-          .withColumn("_maxp", max("pos").over(ringW))
-          .filter(!(col("pos") === col("_maxp") && col("pos") =!= col("_f").getField("pos") &&
-            col("x") === col("_f").getField("x") && col("y") === col("_f").getField("y")))
-          .drop("_f", "_maxp")
-        // vertex → node id in (pgroup, pos) order — a STRUCT sort key,
-        // so no arithmetic bound on vertices-per-feature (assign
-        // checkpoints internally; no second persist layer)
-        val (keyed, npn) = SequentialIds.assignCounted(
-            open.withColumn("okey", struct(col("pgroup"), col("pos"))),
-            "okey", "node_id", polyNodeOffset, negIds)
-        val pn = keyed.drop("okey")
-        val ringsDf = pn.groupBy("pgroup", "part_idx", "ring_idx")
-          .agg(array_sort(collect_list(struct(col("pos"), col("node_id")))).as("_kv"))
-          .withColumn("ring", transform(col("_kv"), x => x.getField("node_id")))
-        // sequential way ids in (pgroup, part, ring) order — holes
-        // beyond the first AND parts beyond the first are first-class
-        // (a polygon may carry any number of interior rings; a
-        // MultiPolygon any number of parts), so no per-feature id
-        // arithmetic either. Not cached: the ways and the relations
-        // below each reread the assignment's checkpoint
-        val pw = SequentialIds.assign(
-            ringsDf.withColumn("rkey", struct(col("pgroup"), col("part_idx"), col("ring_idx"))),
-            "rkey", "way_seq", 0L)
+        (pw, pr, Seq(grouped))
+      case Some(rings) =>
+        // the rings hold node ranks: they take the nodes' id mapping;
+        // the way re-closes from the assigned ids
+        val pw = rings
+          .withColumn("ring", transform(col("ring"), polyIdFrom))
           .withColumn("way_id", polyId(lit(polyWayBase) + col("way_seq")))
-          .drop("rkey", "way_seq")
+          .drop("way_seq")
           .withColumn("closed_nds", concat(col("ring"), slice(col("ring"), 1, 1)))
         // reference generator.py:683: no interiors → plain closed
         // way; interiors → multipolygon relation, outer + one
@@ -1034,35 +1109,24 @@ object ChangegenPipeline {
             struct(r.getField("way_id").as("ref"), lit("way").as("mtype"),
               when(r.getField("ring_idx") === 0, lit("outer")).otherwise(lit("inner")).as("role"))))
           .select(col("pgroup"), col("members"))
-        (pn, npn, pw, pr, Nil)
+        (pw, pr, Nil)
     }
     // zone guard rides the id column (see [[zoneGuard]] — the eager
     // count here was one extra job + materialization barrier per build)
     val polyNodes = polyNodes0.withColumn("node_id",
       zoneGuard(col("node_id"), polyNodeOffset, polyNodeWindow, negIds, "polygon ring nodes"))
     dbg(debug, s"stage 4b (polygons): $nPolyNodes ring nodes")
-    // 4c. point features (reference generator.py:622-631, the
-    // non-modify Point branch): one v1 <create> node per feature at
-    // its reprojected coordinates, carrying the table-derived tags
-    // (tags=feat_tags, UNFILTERED — unlike the modify branch, osm_id
-    // stays a tag). No ways, no junctions, no relations.
-    val (pointNodes, nPoints) = pointWkb match {
+    // 4c. point features: the ranked points take their zone's ids and
+    // carry the table-derived tags (tags=feat_tags, UNFILTERED — unlike
+    // the modify branch, osm_id stays a tag). No ways, no junctions, no
+    // relations.
+    val (pointNodes, nPoints) = pointsDone() match {
       case None =>
         (spark.range(0).select(col("id").as("node_id"),
           lit(0.0).as("x"), lit(0.0).as("y"),
           map().cast("map<string,string>").as("ptags")), 0L)
-      case Some(src) =>
-        val dec = toWgs84(src.select(col("pgrp").cast("long").as("pgrp"), col("ptags"),
-            element_at(call_function("graft_geom_parts", col("wkb")), 1).as("_v"))
-          // malformed WKB decodes to NULL — DROP the feature (the same
-          // drop-don't-throw contract as the exploding line/poly seams,
-          // where posexplode(null) yields zero rows)
-          .filter(col("_v").isNotNull)
-          .select(col("pgrp"), col("ptags"), col("_v.x").as("x"), col("_v.y").as("y")), pointSrcEpsg)
-        // assign materializes its frame internally (ONE read of a live
-        // JDBC source) — no second persist layer needed
-        val (pn, n) = SequentialIds.assignCounted(dec, "pgrp", "node_id", pointNodeOffset, negIds)
-        (pn.select(col("node_id"), col("x"), col("y"), col("ptags")), n)
+      case Some((pn, n)) =>
+        (pn.select(idFrom(pointNodeOffset)(col("node_id")).as("node_id"), col("x"), col("y"), col("ptags")), n)
     }
     val pointNodeXml = pointNodes.select(
       OsmChangeXml.nodeXml(col("node_id"), lit(1), fp6(col("y")), fp6(col("x")),

@@ -2,7 +2,7 @@ package graft.osm
 
 import java.io.{BufferedOutputStream, FileOutputStream, OutputStream}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import java.util.zip.GZIPOutputStream
 
 import org.apache.spark.sql.{Column, DataFrame}
@@ -270,6 +270,16 @@ object OsmChangeXml {
     * have a single string column of rendered element XML. Renders
     * distributed to text parts, then stream-concatenates into one
     * (optionally gzipped) file.
+    *
+    * Jobs: the sections render at once, each on its own thread with its
+    * jobs tagged `graft-cg-create` / `-modify` / `-delete` (see
+    * [[graft.JobStages]]); assembly then concatenates them in that
+    * fixed order on the driver, so the bytes do not depend on which
+    * section finished first. If a section fails, the others' jobs are
+    * cancelled and awaited, the first failure is rethrown, and neither
+    * the part files nor a partial document remain: the document is
+    * assembled into a temp file beside `out` and renamed over it, so an
+    * existing `out` stays as it was until the new one is complete.
     */
   def write(
       out: String,
@@ -277,38 +287,44 @@ object OsmChangeXml {
       modifies: Option[DataFrame] = None,
       deletes: Option[DataFrame] = None,
       gzip: Boolean = false): Unit = {
-    val tmp = Files.createTempDirectory("osc")
-    def dump(df: DataFrame, name: String): Path = {
-      val p = tmp.resolve(name)
-      df.coalesce(1).write.mode("overwrite").text(p.toString)
-      p
-    }
-    val sections = Seq(
-      "create" -> Some(creates), "modify" -> modifies, "delete" -> deletes
-    ).collect { case (name, Some(df)) => name -> dump(df, name) }
-
     import scala.jdk.CollectionConverters._
-    val raw = new BufferedOutputStream(new FileOutputStream(out), 1 << 20)
-    val os: OutputStream = if (gzip) new GZIPOutputStream(raw, 1 << 20) else raw
+    val sections = Seq("create" -> Some(creates), "modify" -> modifies, "delete" -> deletes)
+      .collect { case (name, Some(df)) => name -> df }
+    val tmp = Files.createTempDirectory("osc")
     try {
-      def emit(s: String): Unit = os.write(s.getBytes(StandardCharsets.UTF_8))
-      emit("<?xml version='1.0' encoding='UTF-8'?>\n")
-      emit("<osmChange version=\"0.6\" generator=\"graft\">\n")
-      sections.foreach { case (name, dir) =>
-        emit(s"<$name>\n")
-        // part files in name order = partition order
-        val listing = Files.list(dir)
-        val sorted =
-          try listing.iterator().asScala.toSeq
-            .filter(_.getFileName.toString.startsWith("part-")).sortBy(_.getFileName.toString)
-          finally listing.close()
-        sorted.foreach { p => Files.copy(p, os) }
-        emit(s"</$name>\n")
-      }
-      emit("</osmChange>\n")
+      val dirs = graft.JobStages.concurrently(creates.sparkSession, sections.map { case (name, df) =>
+        name -> (() => {
+          val p = tmp.resolve(name)
+          df.coalesce(1).write.mode("overwrite").text(p.toString)
+          p
+        })
+      })
+      val target = Paths.get(out).toAbsolutePath
+      val part = target.resolveSibling(s".${target.getFileName}.${java.util.UUID.randomUUID}.tmp")
+      try {
+        val raw = new BufferedOutputStream(Files.newOutputStream(part, StandardOpenOption.CREATE_NEW), 1 << 20)
+        val os: OutputStream = if (gzip) new GZIPOutputStream(raw, 1 << 20) else raw
+        try {
+          def emit(s: String): Unit = os.write(s.getBytes(StandardCharsets.UTF_8))
+          emit("<?xml version='1.0' encoding='UTF-8'?>\n")
+          emit("<osmChange version=\"0.6\" generator=\"graft\">\n")
+          sections.map(_._1).zip(dirs).foreach { case (name, dir) =>
+            emit(s"<$name>\n")
+            // part files in name order = partition order
+            val listing = Files.list(dir)
+            val sorted =
+              try listing.iterator().asScala.toSeq
+                .filter(_.getFileName.toString.startsWith("part-")).sortBy(_.getFileName.toString)
+              finally listing.close()
+            sorted.foreach { p => Files.copy(p, os) }
+            emit(s"</$name>\n")
+          }
+          emit("</osmChange>\n")
+        } finally os.close()
+        Files.move(part, target, StandardCopyOption.ATOMIC_MOVE)
+      } finally Files.deleteIfExists(part)
     } finally {
-      os.close()
-      // temp cleanup must also run on assembly failure
+      // the sections have all returned (see JobStages.Group.await)
       try Files.walk(tmp).iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
       catch { case _: Throwable => () }
     }

@@ -247,6 +247,41 @@ class OsmXmlSpec extends AnyFunSuite {
     assert(content.endsWith("</osmChange>\n"))
     Files.deleteIfExists(Paths.get(out))
   }
+  test("write() on a failing section: the error surfaces, siblings stop, out and the temp space stay clean") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.SparkInternals
+    val tmpRoot = Paths.get(System.getProperty("java.io.tmpdir"))
+    def listing(d: java.nio.file.Path): Set[String] = {
+      val l = Files.list(d)
+      try l.iterator().asScala.map(_.getFileName.toString).toSet finally l.close()
+    }
+    def oscDirs() = listing(tmpRoot).filter(n => n.startsWith("osc") && Files.isDirectory(tmpRoot.resolve(n)))
+    val dir = Files.createTempDirectory("graft_write_fail")
+    val out = dir.resolve("doc.osc")
+    val previous = "<previous document/>\n".getBytes("UTF-8")
+    Files.write(out, previous)
+    // a create section that runs ~30 s unless cancelled, read row by row
+    // so a cancelled task stops at its next row
+    val slow = udf((i: Int) => { Thread.sleep(10); s"<node id=\"$i\"/>" })
+    val creates = spark.sparkContext.parallelize(0 until 3000, 4).toDF("i").select(slow(col("i")).as("xml"))
+    val deletes = spark.range(0, 100, 1, 4).select(
+      when(col("id") === 42, raise_error(lit("planted section failure"))).otherwise(col("id").cast("string")).as("xml"))
+    val before = oscDirs()
+    val t0 = System.nanoTime()
+    val e = intercept[Throwable](OsmChangeXml.write(out.toString, creates, deletes = Some(deletes)))
+    val seconds = (System.nanoTime() - t0) / 1e9
+    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("planted section failure")), e.toString)
+    // the create section was cancelled, not run to its end, and had
+    // stopped before write returned
+    assert(seconds < 15, s"write took $seconds s")
+    SparkInternals.drainListeners(spark)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    assert(Files.readAllBytes(out).sameElements(previous), "an existing out was modified")
+    assert(listing(dir) == Set("doc.osc"), s"assembly leftovers: ${listing(dir)}")
+    assert((oscDirs() -- before).isEmpty, s"temp part directories left: ${oscDirs() -- before}")
+  }
+
   test("torn .osc shard export is detected by the consumer gate; torn LSH build refuses to serve") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

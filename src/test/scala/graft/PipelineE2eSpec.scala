@@ -911,4 +911,94 @@ class PipelineE2eSpec extends AnyFunSuite {
     assert(withOrders == doc)
     Files.deleteIfExists(Paths.get(pbf))
   }
+
+  /** A real-input directory: `extract.osm.pbf` (12 ways of 5 nodes) and
+    * three `--suffix=_new` feature tables — `roads_new` (LineStrings,
+    * half of them within the junction radius of extract nodes, plus a
+    * MultiLineString), `buildings_new` (squares, every third holed,
+    * plus a MultiPolygon) and `pois_new` (Points with a `kind` column). */
+  private def wkbFixture(): String = {
+    import spark.implicits._
+    import graft.functions.WkbGeomExpr
+    import graft.osm.{OsmModel, OsmPbf}
+    val dir = Files.createTempDirectory("graft_wkb_ids").toString
+    val nodes = for (w <- 0 until 12; k <- 0 until 5)
+      yield OsmModel.Node(w * 5L + k + 1, 1, 40.0 + w, 10.0 + k * 0.3, Map.empty)
+    OsmPbf.write(s"$dir/extract.osm.pbf", nodes,
+      (0 until 12).map(w => OsmModel.Way(100L + w, 1, (1L to 5L).map(_ + w * 5L), Map.empty)), Nil)
+    def line(r: Int) = Array.tabulate(4)(k => (10.1 + 0.3 * k, (if (r % 2 == 0) 40.1 else 80.0) + r * 0.5))
+    val roads = (0 until 30).map(r => (r + 1L, WkbGeomExpr.encode(2, line(r)))) :+
+      (31L, WkbGeomExpr.encodeMulti(5, Array(Array(line(40)), Array(line(41)))))
+    roads.toDF("osm_id", "wkb_geometry").write.parquet(s"$dir/roads_new.parquet")
+    def square(x: Double, y: Double, d: Double) =
+      Array((x, y), (x + d, y), (x + d, y + d), (x, y + d), (x, y))
+    val buildings = (0 until 20).map { i =>
+      val (x, y) = (100.0 + i, 20.0)
+      val rings = if (i % 3 == 0) Array(square(x, y, 0.5), square(x + 0.1, y + 0.1, 0.2)) else Array(square(x, y, 0.5))
+      (i + 1L, WkbGeomExpr.encodePolygon(rings))
+    } :+ (21L, WkbGeomExpr.encodeMulti(6, Array(Array(square(130.0, 20.0, 0.5)), Array(square(131.0, 20.0, 0.5)))))
+    buildings.toDF("osm_id", "wkb_geometry").write.parquet(s"$dir/buildings_new.parquet")
+    (0 until 15).map(i => (i + 1L, if (i % 2 == 0) "cafe" else "bench", WkbGeomExpr.encode(1, Array((150.0 + i * 0.1, 30.0)))))
+      .toDF("osm_id", "kind", "wkb_geometry").write.parquet(s"$dir/pois_new.parquet")
+    dir
+  }
+
+  /** md5 of a changefile's lines, each prefixed with its section, sorted. */
+  private def sortedLineDigest(path: String): String = {
+    var section = ""
+    val lines = new String(Files.readAllBytes(Paths.get(path)), "UTF-8").split('\n').map { l =>
+      if (l.startsWith("<create") || l.startsWith("<modify") || l.startsWith("<delete")) section = l
+      s"$section $l"
+    }
+    java.security.MessageDigest.getInstance("MD5").digest(lines.sorted.mkString("\n").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+  }
+
+  test("WKB-path ids are pinned: --suffix line, polygon and point tables with --osmsrc, default and --neg-ids") {
+    // the digests of changefiles whose ids were assigned one chain after
+    // another: with the chains running at once, no id may depend on
+    // which of them finishes first
+    val dir = wkbFixture()
+    for ((flags, want) <- Seq(Seq.empty[String] -> "fa732c3af3f84ab00a1c120566f8f71d", Seq("--neg-ids=true") -> "bb4e25dd369ec12ea1ec164097337a50")) {
+      val out = s"$dir/ids${flags.size}.osc"
+      ChangegenPipeline.run((Seq(dir, out, "--suffix=_new", s"--osmsrc=$dir/extract.osm.pbf") ++ flags).toArray, spark)
+      assert(sortedLineDigest(out) == want, s"flags ${flags.mkString(" ")}")
+    }
+  }
+
+  test("run tags every job with exactly one graft-cg-<stage> tag and leaves none on the calling thread") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.SparkInternals
+    val sc = spark.sparkContext
+    val dir = wkbFixture()
+    for ((shape, flags) <- Seq("single" -> Nil, "sharded" -> Seq("--shards=2"))) {
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Seq[String])]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = {
+          val tags = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .toSeq.flatMap(_.split(",")).filter(_.startsWith(JobStages.TagPrefix))
+          jobs.add(e.jobId -> tags)
+        }
+      }
+      SparkInternals.drainListeners(spark)
+      sc.addSparkListener(listener)
+      try ChangegenPipeline.run((Seq(dir, s"$dir/$shape.osc", "--suffix=_new",
+        s"--osmsrc=$dir/extract.osm.pbf") ++ flags).toArray, spark)
+      finally {
+        SparkInternals.drainListeners(spark)
+        sc.removeSparkListener(listener)
+      }
+      import scala.jdk.CollectionConverters._
+      val all = jobs.asScala.toSeq
+      val untagged = all.filter(_._2.size != 1)
+      assert(all.nonEmpty && untagged.isEmpty, s"$shape: jobs without exactly one stage tag: $untagged")
+      // "build" (the calling thread's share of frame construction) fires
+      // no job on this input
+      val stages = all.map(_._2.head.stripPrefix(JobStages.TagPrefix)).toSet - "build"
+      val want = Set("classify", "max-ids", "lines", "polygons", "points") ++
+        (if (shape == "single") Set("create", "modify", "delete") else Set("write"))
+      assert(stages == want, s"$shape: stages $stages")
+      assert(!sc.getJobTags().exists(_.startsWith(JobStages.TagPrefix)), s"$shape: ${sc.getJobTags()}")
+    }
+  }
 }
